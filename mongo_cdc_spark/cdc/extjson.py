@@ -9,9 +9,9 @@ The `bson` Python package is not available in this environment, so this
 is a small pure-Python implementation covering the JSON-representable
 subset our sources produce (our change events arrive as JSON text, so
 ObjectId/Decimal128/Binary wire types are out of scope; they would slot
-into `_canonicalize` if a true BSON source were wired in). Exposed as an
-Arrow-batched pandas UDF — the one custom function the core pipeline
-needs (SURVEY.md §1.5); everything around it is built-in Spark.
+into `_canonicalize` if a true BSON source were wired in). Exposed as one
+Arrow UDF that encodes an event's key payload and value from one decode —
+the one custom function the core pipeline needs (SURVEY.md §1.5).
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ import json
 import math
 from typing import Any
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,6 +55,30 @@ def _canonicalize(value: Any) -> Any:
     return value
 
 
+# json.loads that canonicalizes each number (and NaN/±Infinity) as parsed
+_DECODER = json.JSONDecoder(parse_int=lambda t: _canonicalize(int(t)),
+                            parse_float=lambda t: _canonicalize(float(t)),
+                            parse_constant=lambda t: _canonicalize(float(t)))
+
+
+def _decode(json_text: str, nested_json_fields: tuple[str, ...]) -> Any:
+    parsed = _DECODER.decode(json_text)
+    if isinstance(parsed, dict):
+        for fname in nested_json_fields:
+            inner = parsed.get(fname)
+            if isinstance(inner, str):
+                try:
+                    parsed[fname] = _DECODER.decode(inner)
+                except ValueError:
+                    pass  # leave as string if not valid JSON
+    return parsed
+
+
+# escapeHTML=true in the reference (main.go:117,138) ≈ ensure_ascii here:
+# non-ASCII is escaped either way; separators match Go's json.Marshal.
+_encode = json.JSONEncoder(separators=(",", ":"), ensure_ascii=True).encode
+
+
 def to_canonical_ext_json(json_text: str | None,
                           nested_json_fields: tuple[str, ...] = ()) -> str | None:
     """JSON text → canonical Extended JSON v2 text (driver-side helper).
@@ -68,32 +92,29 @@ def to_canonical_ext_json(json_text: str | None,
     if json_text is None:
         return None
     try:
-        parsed = json.loads(json_text)
+        return _encode(_decode(json_text, nested_json_fields))
     except (ValueError, TypeError):
         return None  # skip-on-error, like main.go:119-121/140-142
-    if isinstance(parsed, dict):
-        for fname in nested_json_fields:
-            inner = parsed.get(fname)
-            if isinstance(inner, str):
-                try:
-                    parsed[fname] = json.loads(inner)
-                except ValueError:
-                    pass  # leave as string if not valid JSON
-    # escapeHTML=true in the reference (main.go:117,138) ≈ ensure_ascii here:
-    # non-ASCII is escaped either way; separators match Go's json.Marshal.
-    return json.dumps(_canonicalize(parsed), separators=(",", ":"),
-                      ensure_ascii=True)
 
 
-@F.pandas_udf(T.StringType())
-def ext_json_udf(s: pd.Series) -> pd.Series:
-    """Vectorized (Arrow-batched) canonical Extended JSON encoder."""
-    return s.map(to_canonical_ext_json)
+def event_key_value(json_text: str | None) -> tuple[str | None, str | None]:
+    """`to_json` text of a whole change event → (Ext JSON of its
+    documentKey, Ext JSON of the event with fullDocument inlined as a
+    subdocument), from one decode of the event."""
+    if json_text is None:
+        return None, None
+    ev = _decode(json_text, ("fullDocument",))
+    key = ev.get("documentKey")
+    return None if key is None else _encode(key), _encode(ev)
 
 
-@F.pandas_udf(T.StringType())
-def ext_json_event_udf(s: pd.Series) -> pd.Series:
-    """Whole-change-event encoder: like ext_json_udf but inlines the
-    fullDocument JSON-string column as a canonical subdocument."""
-    return s.map(lambda t: to_canonical_ext_json(
-        t, nested_json_fields=("fullDocument",)))
+@F.arrow_udf(T.StructType([T.StructField("payload", T.StringType()),
+                           T.StructField("value", T.StringType())]))
+def event_ext_json_udf(events: pa.Array) -> pa.Array:
+    """Arrow-batched event_key_value: the key payload and the value of
+    each event, as struct<payload, value>."""
+    pairs = [event_key_value(t) for t in events.to_pylist()]
+    return pa.StructArray.from_arrays(
+        [pa.array([p for p, _ in pairs], pa.string()),
+         pa.array([v for _, v in pairs], pa.string())],
+        names=["payload", "value"])

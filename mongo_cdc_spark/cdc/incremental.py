@@ -38,7 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from mongo_cdc_spark.cdc.schema import CHANGE_EVENT_SCHEMA, CORRUPT_COL
+from mongo_cdc_spark.cdc.schema import CHANGE_EVENT_SCHEMA
+from mongo_cdc_spark.cdc.transform import parse_events
 
 _UPSERT_OPS = ("insert", "update", "replace")
 _PRE_OPS = ("update", "replace", "delete")
@@ -49,26 +50,13 @@ CHANGE_EVENT_SCHEMA_PREIMAGE = T.StructType(
     CHANGE_EVENT_SCHEMA.fields
     + [T.StructField("fullDocumentBeforeChange", T.StringType())]
 )
-_PREIMAGE_PERMISSIVE = T.StructType(
-    CHANGE_EVENT_SCHEMA_PREIMAGE.fields
-    + [T.StructField(CORRUPT_COL, T.StringType())]
-)
 
 
 def parse_change_events_with_preimage(raw: DataFrame,
                                       value_col: str = "value") -> DataFrame:
     """parse_change_events twin that also surfaces
-    `fullDocumentBeforeChange`; same PERMISSIVE skip-on-error."""
-    parsed = raw.select(
-        F.from_json(F.col(value_col).cast("string"), _PREIMAGE_PERMISSIVE,
-                    {"mode": "PERMISSIVE"}).alias("ev"),
-    ).select("ev.*")
-    return parsed.filter(
-        F.col(CORRUPT_COL).isNull()
-        & F.col("ns.db").isNotNull()
-        & F.col("ns.coll").isNotNull()
-        & F.col("documentKey._id").isNotNull()
-    ).drop(CORRUPT_COL)
+    `fullDocumentBeforeChange`; same single parse and skip-on-error."""
+    return parse_events(raw, CHANGE_EVENT_SCHEMA_PREIMAGE, value_col)
 
 
 def view_deltas(events: DataFrame, group_field: str,

@@ -18,7 +18,8 @@ from mongo_cdc_spark.cdc.schema import (
     CHANGE_EVENT_SCHEMA_PERMISSIVE,
     CORRUPT_COL,
 )
-from mongo_cdc_spark.cdc.transform import parse_change_events, to_kafka_records
+from mongo_cdc_spark.cdc.transform import (
+    parse_change_events, to_kafka_records, valid_event)
 from mongo_cdc_spark.config import Config
 
 
@@ -47,19 +48,13 @@ def read_change_stream_files(spark: SparkSession, path: str,
     (main.go:104-108) — so relaying this stream directly never emits
     empty records. Pass keep_corrupt=True to keep the rejects (with
     the _corrupt_record column) for DLQ routing via relay_with_dlq."""
-    from pyspark.sql import functions as F
-
     raw = (spark.readStream
            .schema(CHANGE_EVENT_SCHEMA_PERMISSIVE)
            .option("mode", "PERMISSIVE")
            .json(path))
     if keep_corrupt:
         return raw
-    return (raw.filter(F.col(CORRUPT_COL).isNull()
-                       & F.col("ns.db").isNotNull()
-                       & F.col("ns.coll").isNotNull()
-                       & F.col("documentKey._id").isNotNull())
-            .drop(CORRUPT_COL))
+    return raw.filter(valid_event()).drop(CORRUPT_COL)
 
 
 def read_change_stream_kafka(spark: SparkSession, cfg: Config,
@@ -126,8 +121,6 @@ def relay_with_dlq(events: DataFrame,
     valid records reach `sink` and rejects reach `dlq_sink` for the
     same epoch, and a crash replays both from the checkpoint.
     """
-    from pyspark.sql import functions as F
-
     if CORRUPT_COL not in events.columns:
         raise ValueError(
             f"relay_with_dlq needs the {CORRUPT_COL!r} column to route "
@@ -135,10 +128,7 @@ def relay_with_dlq(events: DataFrame,
             "or parse_change_events(..., keep_corrupt=True); the default "
             "parse output has already dropped corrupt rows.")
 
-    is_valid = (F.col(CORRUPT_COL).isNull()
-                & F.col("ns.db").isNotNull()
-                & F.col("ns.coll").isNotNull()
-                & F.col("documentKey._id").isNotNull())
+    is_valid = valid_event()
 
     def _route(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()

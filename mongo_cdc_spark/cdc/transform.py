@@ -1,27 +1,47 @@
 """The reference pipeline's per-event transform, as one narrow Spark stage.
 
 Covers operators #2-#6 of SURVEY.md §2.1 (reference: /root/reference/main.go):
-  parse + skip-on-error   (main.go:104-108)  → from_json PERMISSIVE + filter
+  parse + skip-on-error   (main.go:104-108)  → one from_json + filter
   field extraction        (main.go:111-116)  → Catalyst projection
   dynamic topic routing   (main.go:113)      → concat_ws("." , db, coll)
   Connect key envelope    (main.go:123-131)  → to_json(struct(...)) built-ins
-  Ext-JSON value          (main.go:138-142)  → ext_json_udf (pandas UDF)
+  Ext-JSON key + value    (main.go:117,138)  → event_ext_json_udf (Arrow UDF)
 
-The whole transform is shuffle-free: Scan → Project → UDF → Sink is a
-single whole-stage-codegen'd stage at any scale (only the UDF breaks the
-codegen span, by design — it is the lone Python hop).
+The whole transform is shuffle-free: Scan → Generate(from_json) → Project
+→ UDF → Sink is a single Spark stage at any scale (the UDF is, by design,
+the lone Python hop).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from mongo_cdc_spark.cdc.extjson import ext_json_event_udf, ext_json_udf
-from mongo_cdc_spark.cdc.schema import (
-    CHANGE_EVENT_SCHEMA_PERMISSIVE,
-    CORRUPT_COL,
-)
+from mongo_cdc_spark.cdc.extjson import event_ext_json_udf
+from mongo_cdc_spark.cdc.schema import CHANGE_EVENT_SCHEMA, CORRUPT_COL
+
+
+def valid_event() -> Column:
+    """No corrupt text, and the fields the pipeline interprets present."""
+    return (F.col(CORRUPT_COL).isNull() & F.col("ns.db").isNotNull()
+            & F.col("ns.coll").isNotNull()
+            & F.col("documentKey._id").isNotNull())
+
+
+def parse_events(raw: DataFrame, schema: T.StructType,
+                 value_col: str = "value",
+                 keep_corrupt: bool = False) -> DataFrame:
+    """Decode raw JSON events into `schema` + CORRUPT_COL, dropping invalid
+    ones unless keep_corrupt. Behind a Generate node, the parse cannot be
+    copied into the pushed-down filter, so each event is parsed once."""
+    permissive = T.StructType(
+        schema.fields + [T.StructField(CORRUPT_COL, T.StringType())])
+    parsed = raw.select(F.inline(F.array(F.from_json(
+        F.col(value_col).cast("string"), permissive, {"mode": "PERMISSIVE"}))))
+    if keep_corrupt:
+        return parsed
+    return parsed.filter(valid_event()).drop(CORRUPT_COL)
 
 
 def parse_change_events(raw: DataFrame, value_col: str = "value",
@@ -33,21 +53,7 @@ def parse_change_events(raw: DataFrame, value_col: str = "value",
     never kills the stream. Pass keep_corrupt=True to route rejects to a
     dead-letter sink instead of dropping (a flagged improvement).
     """
-    parsed = raw.select(
-        F.from_json(F.col(value_col).cast("string"),
-                    CHANGE_EVENT_SCHEMA_PERMISSIVE,
-                    {"mode": "PERMISSIVE"}).alias("ev"),
-    ).select("ev.*")
-    if keep_corrupt:
-        return parsed
-    # A record is corrupt if from_json captured raw text, or the envelope
-    # is missing the fields the pipeline interprets (ns, documentKey).
-    return parsed.filter(
-        F.col(CORRUPT_COL).isNull()
-        & F.col("ns.db").isNotNull()
-        & F.col("ns.coll").isNotNull()
-        & F.col("documentKey._id").isNotNull()
-    ).drop(CORRUPT_COL)
+    return parse_events(raw, CHANGE_EVENT_SCHEMA, value_col, keep_corrupt)
 
 
 def with_topic(events: DataFrame) -> DataFrame:
@@ -58,6 +64,14 @@ def with_topic(events: DataFrame) -> DataFrame:
     """
     return events.withColumn(
         "topic", F.concat_ws(".", F.col("ns.db"), F.col("ns.coll")))
+
+
+def _ext_json() -> Column:
+    """struct<payload, value>: key and value share this one UDF call."""
+    return event_ext_json_udf(F.to_json(F.struct(
+        F.col("_id"), F.col("operationType"), F.col("clusterTime"),
+        F.col("ns"), F.col("documentKey"), F.col("fullDocument"),
+    )))
 
 
 def connect_key_envelope(events: DataFrame) -> DataFrame:
@@ -75,18 +89,14 @@ def connect_key_envelope(events: DataFrame) -> DataFrame:
                 F.lit("string").alias("type"),
                 F.lit(False).alias("optional"),
             ).alias("schema"),
-            ext_json_udf(F.to_json(F.col("documentKey"))).alias("payload"),
+            _ext_json().getField("payload").alias("payload"),
         )),
     )
 
 
 def ext_json_value(events: DataFrame) -> DataFrame:
     """Whole-event canonical Extended JSON value (main.go:138-142)."""
-    whole_event = F.to_json(F.struct(
-        F.col("_id"), F.col("operationType"), F.col("clusterTime"),
-        F.col("ns"), F.col("documentKey"), F.col("fullDocument"),
-    ))
-    return events.withColumn("value", ext_json_event_udf(whole_event))
+    return events.withColumn("value", _ext_json().getField("value"))
 
 
 def to_kafka_records(parsed: DataFrame) -> DataFrame:
@@ -107,8 +117,6 @@ def schema_fingerprints(events: DataFrame) -> DataFrame:
     size), so streaming state stays O(schemas) and the batch twin
     (`operators.cdc_batch.cdc_schema_evolution_audit`) is its graded
     oracle; drain parity is pinned in tests/test_streaming.py."""
-    from pyspark.sql import functions as F
-
     fp = F.concat_ws(
         ",", F.sort_array(F.json_object_keys("fullDocument")))
     key = F.col("documentKey._id").cast("bigint")

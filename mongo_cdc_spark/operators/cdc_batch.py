@@ -78,11 +78,11 @@ def cdc_key_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     connect_key_envelope, the same code the streaming relay runs).
 
     Manual predicate pushdown: Catalyst cannot push a filter through
-    the Ext-JSON pandas UDF, so the key filter is applied to the
+    the Ext-JSON Arrow UDF, so the key filter is applied to the
     PARSED envelope before the Python hop — serializing only the 100
     selected keys instead of the whole corpus (150k rows at sf0.1).
-    The value serializer is not invoked at all: this query checks the
-    KEY envelope, and the value path has its own graded checks
+    The shared Ext-JSON UDF also encodes the value, which the final
+    projection drops; the value path has its own graded checks
     (cdc_topic_routing, tests/test_extjson.py round-trips)."""
     from mongo_cdc_spark.cdc.transform import (
         connect_key_envelope, with_topic)
@@ -90,16 +90,7 @@ def cdc_key_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed = parse_change_events(_synthetic_change_events(spark, sf_dir))
     keyed = (parsed
              .withColumn("order_key", F.col("documentKey._id").cast("long"))
-             .filter(F.col("order_key") < 100)
-             # persist the ~100 surviving rows: without the barrier,
-             # every downstream operator boundary (topic projection,
-             # the Python-UDF input projection, the envelope project)
-             # re-evaluates the full from_json over the corpus — the
-             # parse ran ~3x per action (round-13 A/B: 3.4 s -> 1.4 s
-             # interleaved best; guide §2.4 "don't compute things you
-             # throw away"). O(selected keys) rows cached, data-grain
-             # stays one pass.
-             .persist())
+             .filter(F.col("order_key") < 100))
     return (connect_key_envelope(with_topic(keyed))
             .select("order_key", "topic", "key")
             .orderBy("order_key"))

@@ -81,9 +81,11 @@ def test_parse_skips_corrupt_and_incomplete(spark):
 
 
 def test_parse_keep_corrupt_routes_dlq(spark):
-    raw = spark.createDataFrame([("{bad",)], "value string")
+    raw = spark.createDataFrame([("{bad",), (json.dumps(_event()),)],
+                                "value string")
     kept = parse_change_events(raw, keep_corrupt=True).collect()
-    assert len(kept) == 1 and kept[0]["_corrupt_record"] == "{bad"
+    assert len(kept) == 2 and kept[0]["_corrupt_record"] == "{bad"
+    assert kept[1]["_corrupt_record"] is None and kept[1].ns.db == "shop"
 
 
 def test_streaming_end_to_end(spark, tmp_path: Path):
@@ -236,3 +238,79 @@ def test_file_source_skips_corrupt_by_default(spark, tmp_path: Path):
     q.stop()
     assert [r.topic for r in out] == ["shop.orders"]
     assert all(r.topic for r in out)
+
+
+# One event per operation type: a non-ASCII db name, int32/int64 edges,
+# integral and fractional doubles, an overflowing double, -0.0, and a
+# delete without a post-image; plus a corrupt line the parse must skip.
+_GOLDEN_LINES = [
+    json.dumps(_event(key="7", ts="2024-11-08T00:00:01Z", full=(
+        '{"qty": 3, "big": 4294967296, "price": 9.5, "whole": 2.0}'))),
+    json.dumps(_event(db="café", coll="menu", op="update", rt="rt2",
+                      ts="2024-11-08T00:00:02Z", full=(
+                          '{"name": "crème", "n": -2147483648, '
+                          '"tags": [1, 2.5e-3, 1e400]}'))),
+    json.dumps(_event(op="replace", key="8", rt="rt3",
+                      ts="2024-11-08T00:00:03Z", full=(
+                          '{"qty": 2147483648, "nested": '
+                          '{"d": 9223372036854775807, "x": -0.0}}'))),
+    json.dumps(_event(op="delete", key="9", rt="rt4", full=None,
+                      ts="2024-11-08T00:00:04Z")),
+    "{not json",
+]
+
+# (topic, key, value) as the relay produced them before its key and
+# value encoders were merged into one UDF: the wire format is pinned.
+_GOLDEN_RECORDS = [
+    ('shop.orders',
+     '{"schema":{"type":"string","optional":false},"payload":"{\\"_id\\":\\"7\\"}"}',
+     '{"_id":{"_data":"rt1"},"operationType":"insert","clusterTime":"2024-11-08T00:00:01.000Z","ns":{"db":"shop","coll":"orders"},"documentKey":{"_id":"7"},"fullDocument":{"qty":{"$numberInt":"3"},"big":{"$numberLong":"4294967296"},"price":{"$numberDouble":"9.5"},"whole":{"$numberDouble":"2.0"}}}'),
+    ('café.menu',
+     '{"schema":{"type":"string","optional":false},"payload":"{\\"_id\\":\\"{\\\\\\"$oid\\\\\\": \\\\\\"abc\\\\\\"}\\"}"}',
+     '{"_id":{"_data":"rt2"},"operationType":"update","clusterTime":"2024-11-08T00:00:02.000Z","ns":{"db":"caf\\u00e9","coll":"menu"},"documentKey":{"_id":"{\\"$oid\\": \\"abc\\"}"},"fullDocument":{"name":"cr\\u00e8me","n":{"$numberInt":"-2147483648"},"tags":[{"$numberInt":"1"},{"$numberDouble":"0.0025"},{"$numberDouble":"Infinity"}]}}'),
+    ('shop.orders',
+     '{"schema":{"type":"string","optional":false},"payload":"{\\"_id\\":\\"8\\"}"}',
+     '{"_id":{"_data":"rt3"},"operationType":"replace","clusterTime":"2024-11-08T00:00:03.000Z","ns":{"db":"shop","coll":"orders"},"documentKey":{"_id":"8"},"fullDocument":{"qty":{"$numberLong":"2147483648"},"nested":{"d":{"$numberLong":"9223372036854775807"},"x":{"$numberDouble":"-0.0"}}}}'),
+    ('shop.orders',
+     '{"schema":{"type":"string","optional":false},"payload":"{\\"_id\\":\\"9\\"}"}',
+     '{"_id":{"_data":"rt4"},"operationType":"delete","clusterTime":"2024-11-08T00:00:04.000Z","ns":{"db":"shop","coll":"orders"},"documentKey":{"_id":"9"}}'),
+]
+
+
+@pytest.fixture()
+def golden_raw(spark):
+    return spark.createDataFrame([(ln,) for ln in _GOLDEN_LINES],
+                                 "value string")
+
+
+def _executed_plan(df) -> str:
+    """The executed physical plan of `df` (the final plan under AQE)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_relay_golden_bytes(golden_raw):
+    rows = to_kafka_records(parse_change_events(golden_raw)).collect()
+    got = sorted((r.topic, r.key, r.value) for r in rows)
+    assert got == sorted(_GOLDEN_RECORDS)
+
+
+@pytest.mark.parametrize("build", ["records", "key_envelope"])
+def test_relay_plan_parses_once_with_one_python_hop(golden_raw, build):
+    """Each event is decoded once by from_json and once in Python: the
+    key and the value share one UDF call in one ArrowEvalPython node."""
+    from mongo_cdc_spark.cdc.transform import (
+        connect_key_envelope, with_topic)
+
+    parsed = parse_change_events(golden_raw)
+    df = (to_kafka_records(parsed) if build == "records"
+          else connect_key_envelope(with_topic(parsed)))
+    plan = _executed_plan(df)
+    assert plan.count("from_json(") == 1
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("event_ext_json_udf(") == 1
+    assert "pythonUDF1" not in plan
+

@@ -82,15 +82,16 @@ _CHECKPOINT_ALLOWLIST: frozenset[tuple[str, str]] = frozenset({
     #      MMR: sel 3x/step, persist 10.2 s vs 3.74 s) — the
     #      nested-cache plan fans out refs^rounds and cache
     #      lookup/substitution over it dominates;
-    #  (3) deep loops (markov power iteration, _STAT_ITERS=20: a
-    #      20-round persist chain never finished; materializing every
-    #      4th round still blew up by round 12-15 — the measured safe
-    #      nesting zone is <= ~6-8 accumulated rounds).
+    #  (3) deep loops (measured on the markov power iteration,
+    #      _STAT_ITERS=20: a 20-round persist chain never finished;
+    #      materializing every 4th round still blew up by round 12-15 —
+    #      the measured safe nesting zone is <= ~6-8 accumulated
+    #      rounds). events_markov_stationary now runs its iterations
+    #      on the driver and has no checkpoint, so it is not listed.
     ("mongo_cdc_spark/operators/dedup.py", "dedup_cluster_assign"),
     ("mongo_cdc_spark/operators/graph.py", "graph_khop_reachability"),
     ("mongo_cdc_spark/operators/graph.py", "graph_kcore_decomposition"),
     ("mongo_cdc_spark/operators/similarity.py", "knn_mmr_rerank"),
-    ("mongo_cdc_spark/operators/timeseries.py", "events_markov_stationary"),
     # -- read-overwrite isolation (CDC apply/compact) --
     ("mongo_cdc_spark/cdc/apply.py", "apply_batch_to_snapshot"),
     ("mongo_cdc_spark/cdc/apply.py", "compact_snapshot"),
