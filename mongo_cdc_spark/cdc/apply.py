@@ -15,17 +15,24 @@ less write amplification per batch, more small files (compact
 periodically). Whole-bucket overwrite is idempotent, so checkpointed
 replay of a batch converges (exactly-once table state over an
 at-least-once stream).
+
+Each batch merges in ONE write job that reads the touched buckets and
+overwrites them with no materialization in between: dynamic overwrite
+writes under `<snapshot>/.spark-staging-<jobId>/` and swaps a `bucket=N`
+dir in only at job commit, after every task has finished reading.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 _UPSERT_OPS = ("insert", "update", "replace")
+_SNAPSHOT_SCHEMA = ("doc_key string, doc string, updated_at timestamp, "
+                    "bucket int")
 
 
 def latest_change_per_key(events: DataFrame) -> DataFrame:
@@ -75,46 +82,36 @@ def apply_batch_to_snapshot(spark: SparkSession, snapshot_path: str,
         probe = jvm.org.apache.hadoop.fs.Path(snapshot_path)
         fs = probe.getFileSystem(
             spark.sparkContext._jsc.hadoopConfiguration())
+        merged = (latest.filter(F.col("op").isin(*_UPSERT_OPS))
+                  .select("doc_key", "doc", "updated_at", "bucket"))
         if fs.exists(probe):
-            existing = (spark.read.parquet(snapshot_path)
-                        .filter(F.col("bucket").isin(touched)))
-        else:  # first batch: snapshot doesn't exist yet
-            existing = None
-        fresh = (latest.filter(F.col("op").isin(*_UPSERT_OPS))
-                 .select("doc_key", "doc", "updated_at", "bucket"))
-        if existing is not None:
-            keep = existing.join(
-                F.broadcast(latest.select("doc_key").distinct()),
-                "doc_key", "left_anti")
-            # materialize BEFORE writing: the write overwrites the very
-            # files `keep` reads from, so the merged frame must not be
-            # lazily re-derived mid-overwrite
-            fresh = keep.unionByName(fresh).localCheckpoint(eager=True)
-        fresh.persist()
-        try:
-            (fresh.repartition("bucket")
-             .write.mode("overwrite")
-             .partitionBy("bucket")
-             .option("partitionOverwriteMode", "dynamic")
-             .parquet(snapshot_path))
-            # dynamic overwrite only replaces partitions PRESENT in the
-            # output — a bucket emptied by deletes writes no rows, so its
-            # stale files must be removed explicitly
-            nonempty = {r.bucket for r in fresh.select("bucket")
-                        .distinct().collect()}
-            emptied = [b for b in touched if b not in nonempty]
-            if emptied:
-                jvm = spark.sparkContext._jvm
-                jsc = spark.sparkContext._jsc
-                conf = jsc.hadoopConfiguration()
-                for b in emptied:
-                    p = jvm.org.apache.hadoop.fs.Path(
-                        f"{snapshot_path}/bucket={b}")
-                    fs = p.getFileSystem(conf)
-                    if fs.exists(p):
-                        fs.delete(p, True)
-        finally:
-            fresh.unpersist()
+            # `keep` may read the files this write replaces: the
+            # staging-dir commit swaps them only after every task read.
+            # `latest` has one row per key, so no distinct is needed
+            keep = (spark.read.schema(_SNAPSHOT_SCHEMA)
+                    .parquet(snapshot_path)
+                    .filter(F.col("bucket").isin(touched))
+                    .join(F.broadcast(latest.select("doc_key")),
+                          "doc_key", "left_anti"))
+            merged = keep.unionByName(merged)
+        # the buckets that receive rows are gathered by the write itself
+        obs = Observation()
+        (merged.repartition("bucket")
+         .observe(obs, F.collect_set("bucket").alias("nonempty"))
+         .write.mode("overwrite")
+         .partitionBy("bucket")
+         .option("partitionOverwriteMode", "dynamic")
+         .parquet(snapshot_path))
+        # dynamic overwrite only replaces partitions PRESENT in the
+        # output — a bucket emptied by deletes writes no rows, so its
+        # stale files must be removed explicitly
+        nonempty = set(obs.get["nonempty"])
+        for b in touched:
+            if b not in nonempty:
+                p = jvm.org.apache.hadoop.fs.Path(
+                    f"{snapshot_path}/bucket={b}")
+                if fs.exists(p):
+                    fs.delete(p, True)
     finally:
         latest.unpersist()
 
@@ -150,8 +147,10 @@ def compact_snapshot(spark: SparkSession, snapshot_path: str) -> dict:
     trigger), like any LSM-ish store's compaction. Two hazards guarded:
 
     - read-overwrite: the full frame is materialized with
-      localCheckpoint BEFORE the dynamic overwrite replaces the files
-      it was read from (same as the apply path).
+      localCheckpoint BEFORE the overwrite. The staging-dir commit
+      alone would make the overwrite safe (as in the apply path), but
+      the checkpoint is also the READ POINT the lost-update guard
+      below compares listings against, so it stays.
     - lost update vs a CONCURRENT apply: if a micro-batch commits to a
       bucket between this function's read and its overwrite, the
       overwrite would resurrect the pre-batch rows. So the per-bucket
@@ -379,9 +378,7 @@ def read_merge_on_read(spark: SparkSession, table_path: str,
     versions = _base_versions(spark, table_path)
     base_dir = (f"{table_path}/{versions[-1][1]}" if versions
                 else f"{table_path}/base")
-    base = _read_or_empty(spark, base_dir,
-                          "doc_key string, doc string, "
-                          "updated_at timestamp, bucket int")
+    base = _read_or_empty(spark, base_dir, _SNAPSHOT_SCHEMA)
     delta = _read_or_empty(spark, f"{table_path}/delta",
                            "doc_key string, op string, doc string, "
                            "updated_at timestamp, seq long, bucket int")

@@ -121,8 +121,8 @@ _L2_ARROW = None
 
 
 def _l2_arrow():
-    """Arrow-vectorized twin of the sequential (x-y)² fold (`_pq_l2` /
-    the Lloyd assignment distance): acc_d = acc_{d-1} + (a[d]-b[d])²
+    """Arrow-vectorized twin of the sequential (x-y)² HOF fold (the
+    Lloyd assignment distance): acc_d = acc_{d-1} + (a[d]-b[d])²
     from 0.0, per-dimension vectorized — bitwise-equal to the HOF fold
     and the oracle's list_sum(list_transform(...)). Nondeterministic
     for the same §4.4 reason as `_dot_arrow`."""
@@ -732,18 +732,10 @@ def _pq_sub_cent(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     return sub, cent
 
 
-def _pq_l2() -> "F.Column":
-    """Sequential (x-y)² fold between bound columns sv and cv — the SAME
-    fold the DuckDB oracles run, so doubles match bitwise."""
-    return F.aggregate(
-        F.zip_with("sv", "cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, d: acc + d)
-
-
 def _py_l2(a, b) -> float:
-    """Driver-side twin of `_pq_l2`: the identical left-to-right
+    """Driver-side twin of `_l2_arrow`: the identical left-to-right
     (x-y)² fold over IEEE-754 doubles, so the result is bit-identical
-    to both the Spark aggregate and DuckDB's list_sum."""
+    to both the Arrow fold and DuckDB's list_sum."""
     acc = 0.0
     for x, y in zip(a, b):
         acc += (x - y) * (x - y)

@@ -99,6 +99,137 @@ def test_apply_rewrites_only_touched_buckets(spark, tmp_path: Path):
     assert got["k0"] == '{"v":1}' and len(got) == 40
 
 
+def _preload(spark, snap, n_keys, n_buckets):
+    """Insert k0..k{n_keys-1} with doc {"v":0}; return {bucket: keys}."""
+    keys = [f"k{i}" for i in range(n_keys)]
+    apply_batch_to_snapshot(spark, snap, _events_df(spark, [
+        _ev(k, doc='{"v":0}', rt=f"r{i}") for i, k in enumerate(keys)
+    ]), n_buckets=n_buckets)
+    by_bucket = {}
+    for r in spark.read.parquet(snap).select("doc_key", "bucket").collect():
+        by_bucket.setdefault(r.bucket, []).append(r.doc_key)
+    return by_bucket
+
+
+def _rows(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).select(
+        "doc_key", "doc", "updated_at", "bucket").collect())
+
+
+def test_apply_keeps_untouched_keys_of_rewritten_buckets(
+        spark, tmp_path: Path):
+    """Read-overwrite: the merge reads the very bucket files its write
+    replaces. With every bucket touched, each bucket's untouched keys
+    must survive with their old doc.
+
+    AQE is off for the call: with it on, the shuffle that reads the
+    snapshot runs as its own stage before the write command starts, so
+    even a static overwrite (which deletes first) would pass. Off, only
+    the dynamic overwrite's staging-dir commit keeps the read safe."""
+    snap = str(tmp_path / "snap")
+    by_bucket = _preload(spark, snap, 64, 4)
+    assert len(by_bucket) == 4 and all(len(v) > 1
+                                       for v in by_bucket.values())
+    changed = {keys[0] for keys in by_bucket.values()}
+    events = _events_df(spark, [
+        _ev(k, op="update", doc='{"v":1}', ts="2024-11-08T00:05:00Z",
+            rt=f"u{k}") for k in sorted(changed)
+    ])
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        apply_batch_to_snapshot(spark, snap, events, n_buckets=4)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    got = _snapshot(spark, snap)
+    assert got == {k: '{"v":1}' if k in changed else '{"v":0}'
+                   for keys in by_bucket.values() for k in keys}
+
+
+def test_apply_removes_emptied_bucket_and_keeps_survivors(
+        spark, tmp_path: Path):
+    """A delete-only batch that empties a bucket removes its directory;
+    one that leaves survivors in its bucket keeps them."""
+    snap = tmp_path / "snap"
+    by_bucket = _preload(spark, str(snap), 16, 4)
+    emptied, partial = sorted(b for b, ks in by_bucket.items()
+                              if len(ks) > 1)[:2]
+    apply_batch_to_snapshot(spark, str(snap), _events_df(spark, [
+        _ev(k, op="delete", ts="2024-11-08T00:05:00Z", rt=f"d{k}")
+        for k in by_bucket[emptied]
+    ]), n_buckets=4)
+    assert not (snap / f"bucket={emptied}").exists()
+
+    gone = by_bucket[partial][0]
+    apply_batch_to_snapshot(spark, str(snap), _events_df(spark, [
+        _ev(gone, op="delete", ts="2024-11-08T00:06:00Z", rt="d2"),
+    ]), n_buckets=4)
+    assert (snap / f"bucket={partial}").exists()
+    assert _snapshot(spark, str(snap)) == {
+        k: '{"v":0}' for b, ks in by_bucket.items() if b != emptied
+        for k in ks if k != gone}
+
+
+def test_apply_delete_only_first_batch(spark, tmp_path: Path):
+    """A delete-only first batch writes no rows; the next batch must
+    still merge into the (empty) snapshot it left behind."""
+    snap = str(tmp_path / "snap")
+    apply_batch_to_snapshot(spark, snap, _events_df(spark, [
+        _ev("a", op="delete", rt="d1"),
+    ]), n_buckets=4)
+    apply_batch_to_snapshot(spark, snap, _events_df(spark, [
+        _ev("b", doc='{"v":1}', ts="2024-11-08T00:05:00Z", rt="i1"),
+    ]), n_buckets=4)
+    assert _snapshot(spark, snap) == {"b": '{"v":1}'}
+
+
+def test_apply_replayed_batch_is_idempotent(spark, tmp_path: Path):
+    """Applying the same batch twice (a checkpointed replay) leaves an
+    identical snapshot."""
+    snap = str(tmp_path / "snap")
+    by_bucket = _preload(spark, snap, 32, 4)
+    keys = sorted(k for ks in by_bucket.values() for k in ks)
+    batch = [
+        _ev(keys[0], op="update", doc='{"v":7}',
+            ts="2024-11-08T00:05:00Z", rt="x1"),
+        _ev(keys[1], op="delete", ts="2024-11-08T00:05:00Z", rt="x2"),
+        _ev("new", doc='{"v":8}', ts="2024-11-08T00:05:00Z", rt="x3"),
+    ]
+    apply_batch_to_snapshot(spark, snap, _events_df(spark, batch),
+                            n_buckets=4)
+    once = _rows(spark, snap)
+    apply_batch_to_snapshot(spark, snap, _events_df(spark, batch),
+                            n_buckets=4)
+    assert _rows(spark, snap) == once
+    assert len(once) == 32
+
+
+def test_apply_runs_one_write_job_without_checkpoint(
+        spark, tmp_path: Path):
+    """A non-first apply is one reduction pass plus one write job: at
+    most 7 Spark jobs, none of them a localCheckpoint."""
+    snap = str(tmp_path / "snap")
+    _preload(spark, snap, 32, 4)
+    events = _events_df(spark, [
+        _ev(f"k{i}", op="update", doc='{"v":1}',
+            ts="2024-11-08T00:05:00Z", rt=f"u{i}") for i in range(0, 32, 3)
+    ])
+    sc = spark.sparkContext
+    group = f"apply-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        apply_batch_to_snapshot(spark, snap, events, n_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    ids = sc.statusTracker().getJobIdsForGroup(group)
+    names = [store.job(j).name() for j in ids]
+    assert 0 < len(ids) <= 7, names
+    assert not [n for n in names if "localCheckpoint" in n], names
+
+
 def test_materialize_stream_end_to_end(spark, tmp_path: Path):
     src = tmp_path / "src"
     src.mkdir()
@@ -178,8 +309,6 @@ def test_compact_snapshot_skips_concurrently_modified_bucket(
         ckpt = orig(self, eager)
         if not state["fired"]:
             # fire exactly once, INSIDE compact's read->overwrite window
-            # (apply_batch_to_snapshot below also calls localCheckpoint,
-            # so the flag must flip before the recursive call)
             state["fired"] = True
             apply_batch_to_snapshot(
                 spark, snap,

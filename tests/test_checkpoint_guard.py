@@ -34,11 +34,13 @@ Round 12 policy — enforced here:
      components, Lloyd rounds, BPE merges, MMR greedy steps,
      Pregel supersteps) where the plan would otherwise grow per
      iteration; and
-   - read-overwrite isolation in the CDC apply/compact paths, where
-     the broken lineage is what lets Spark overwrite the very files
-     the frame was read from (with persist the scan lineage remains
-     and Spark throws "Cannot overwrite a path that is also being
-     read from").
+   - CDC read points and static overwrites: a frame whose read must
+     be pinned before a later step compares against it, or that a
+     STATIC overwrite replaces while reading (with persist the scan
+     lineage remains and Spark throws "Cannot overwrite a path that
+     is also being read from"). A dynamic partition overwrite needs
+     no checkpoint: it stages output and swaps partitions in at job
+     commit.
    Every such site must appear in ``_CHECKPOINT_ALLOWLIST`` below,
    keyed (module-relative path, enclosing function) so line drift
    can't stale the entry.
@@ -92,8 +94,15 @@ _CHECKPOINT_ALLOWLIST: frozenset[tuple[str, str]] = frozenset({
     ("mongo_cdc_spark/operators/graph.py", "graph_khop_reachability"),
     ("mongo_cdc_spark/operators/graph.py", "graph_kcore_decomposition"),
     ("mongo_cdc_spark/operators/similarity.py", "knn_mmr_rerank"),
-    # -- read-overwrite isolation (CDC apply/compact) --
-    ("mongo_cdc_spark/cdc/apply.py", "apply_batch_to_snapshot"),
+    # -- CDC read points and static overwrites --
+    # apply_batch_to_snapshot needs no entry: its dynamic overwrite
+    # stages output and swaps bucket dirs in only at job commit, so it
+    # may read the files it replaces. These three still checkpoint:
+    # compact_snapshot's checkpoint is the read point its lost-update
+    # listing compare is taken against; compact_merge_on_read's is the
+    # one read of base + logs that its row count and new base share
+    # before the logs are deleted; apply_deltas_to_view does a
+    # STATIC overwrite, which deletes the view before writing it.
     ("mongo_cdc_spark/cdc/apply.py", "compact_snapshot"),
     ("mongo_cdc_spark/cdc/apply.py", "compact_merge_on_read"),
     ("mongo_cdc_spark/cdc/incremental.py", "apply_deltas_to_view"),
@@ -147,7 +156,7 @@ def test_no_lazy_or_dynamic_eager_anywhere():
 
 def test_checkpoints_only_where_load_bearing():
     """Every checkpoint site must be allowlisted (iterative lineage
-    truncation or CDC read-overwrite isolation); shared bounded frames
+    truncation, CDC read points or static overwrites); shared bounded frames
     use .persist() — BENCH_r11 measured the eager-everywhere cost at
     up to 2.7x per query."""
     offenders = []
