@@ -35,6 +35,10 @@ from mongo_cdc_spark.operators import (  # noqa: E402
 from mongo_cdc_spark.session import get_spark  # noqa: E402
 
 HEADLINE = [
+    # NOTE 2026-10-18: "cdc_relay" times the BATCH cdc_topic_routing
+    # query (parse + route + count per topic), not the streaming relay;
+    # the stream's throughput is the "cdc_relay_stream" block. The
+    # label keeps its name so its history series stays unbroken.
     ("cdc_relay", cdc_batch.cdc_topic_routing),
     ("q1", relational.q1_pricing_summary),
     ("q3", relational.q3_shipping_priority),
@@ -434,12 +438,11 @@ def _relay_steady_state(spark, sf_dir: str) -> dict:
 
 
 def _warm_session(spark, sf_dir: str) -> None:
-    """Warm a (possibly fresh) session: the JVM/session, the Hadoop
-    FS/parquet reader paths, AND the Python/Arrow worker pool so the
-    first timed query doesn't pay one-time init costs (daemon fork +
-    Arrow IPC setup was ~5 s charged entirely to whichever query first
-    used a pandas_udf). Runs after every chunked session restart, so
-    per-chunk numbers stay comparable to single-session ones."""
+    """Warm a fresh session: the JVM/session, the Hadoop FS/parquet
+    reader paths, AND the Python/Arrow worker pool so the first timed
+    query doesn't pay one-time init costs (daemon fork + Arrow IPC
+    setup was ~5 s charged entirely to whichever query first used a
+    pandas_udf)."""
     spark.range(1000).selectExpr("sum(id)").collect()
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
@@ -449,11 +452,10 @@ def _warm_session(spark, sf_dir: str) -> None:
         return x
 
     spark.range(1000).select(F.sum(_warm("id"))).collect()
-    # the Ext-JSON serializer UDF additionally imports bson in every
-    # worker on first use (~4.5 s across 32 workers) — run it once at
-    # the smallest fixture so the timed relay number is steady-state.
-    # Warm-ups are best-effort: a failure here must not void the
-    # artifact (the timed loop isolates per-query anyway).
+    # Run the relay's batch query once at the smallest fixture so the
+    # first timed label (cdc_relay) is measured warm. Warm-ups are
+    # best-effort: a failure here must not void the artifact (the
+    # timed loop isolates per-query anyway).
     try:
         cdc_batch.cdc_topic_routing(spark, "/root/testdata/sf0.001") \
             .write.mode("overwrite").format("noop").save()
@@ -467,8 +469,8 @@ def _warm_session(spark, sf_dir: str) -> None:
 
 def _batch_probe(spark, sf_dir: str) -> float:
     """Fixed small batch probe (TPC-H q1-shape aggregate over
-    lineitem), timed at session start and at every chunk boundary —
-    the batch-path ambient canary (VERDICT r11 task #4). The relay
+    lineitem), timed once after the session warm-up — the batch-path
+    ambient canary (VERDICT r11 task #4). The relay
     canary is streaming + Python-bound and moved 3.2x in a window
     where batch queries moved 1.05x the OTHER way, so it does not
     proxy batch ambient; this probe runs on the same execution path
@@ -489,6 +491,49 @@ def _batch_probe(spark, sf_dir: str) -> float:
     return round(time.time() - t0, 3)
 
 
+def bench_reps() -> int:
+    """Best-of-N count shared by bench.py and the tools that reuse its
+    loop: $SPARK_GRAFT_BENCH_REPS, default 2. Single-shot numbers on
+    shared local hardware swing ~±20% from scheduler noise; the
+    minimum is the standard steady-state estimate (cf. JMH/timeit
+    practice) and rep 2 also amortizes one-time lineage costs (cache
+    fills) that a long-running deployment never re-pays."""
+    return max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
+
+
+def time_query(spark, name: str, fn, sf_dir: str,
+               reps: int) -> tuple[list[float], str | None]:
+    """Time `reps` noop writes of one registry query `fn` (full
+    computation, no driver-side collect cost). Returns each completed
+    rep's seconds and the error that stopped the reps, or None.
+
+    Per-query fault isolation: one broken query must never void a
+    whole run (round 2's events bug crashed the process and left
+    BENCH_r02.json with rc=1 and no numbers), so an error is returned,
+    never raised, and the caller moves on to its next query."""
+    # Per-query cache isolation: headline queries in one session
+    # accumulate persisted frames (_emb, edge lists, shingle
+    # indexes...) until executor-memory pressure evicts/GC-churns
+    # whichever query runs late in the list (observed: an 8.5 s
+    # knn_pq_search in-suite vs 1.6 s isolated). Clearing BETWEEN
+    # queries keeps each number position-independent; reps of the
+    # SAME query still share their cache, preserving best-of-N's
+    # warm-rep semantics.
+    spark.catalog.clearCache()
+    secs: list[float] = []
+    for r in range(reps):
+        t0 = time.time()
+        try:
+            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        except Exception as exc:  # noqa: BLE001 — isolate & continue
+            err = f"{type(exc).__name__}: {exc}"[:500]
+            print(f"# {name}: ERROR {err}", file=sys.stderr)
+            return secs, err
+        secs.append(round(time.time() - t0, 3))
+        print(f"# {name}[{r}]: {secs[-1]}s", file=sys.stderr)
+    return secs, None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -498,67 +543,20 @@ def main() -> None:
     spark = get_spark("bench")
     _warm_session(spark, sf_dir)
     batch_probe: list[float] = [_batch_probe(spark, sf_dir)]
-    print(f"# batch_probe[chunk 0]: {batch_probe[0]}s", file=sys.stderr)
+    print(f"# batch_probe: {batch_probe[0]}s", file=sys.stderr)
 
-    # Per-query fault isolation: one broken query must never void the
-    # whole artifact (round 2's events bug crashed the process and left
-    # BENCH_r02.json with rc=1 and no numbers). Errors are recorded per
-    # query and the JSON line is ALWAYS emitted.
-    # Best-of-N per query (default 2): single-shot numbers on shared
-    # local hardware swing ~±20% from scheduler noise; the minimum is
-    # the standard steady-state estimate (cf. JMH/timeit practice) and
-    # rep 2 also amortizes one-time lineage costs (cache fills) that a
-    # long-running deployment never re-pays.
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
-    # Chunked fresh-session segments (round 11, VERDICT r10 task #5):
-    # even with per-query clearCache, 300+ queries in ONE session
-    # accumulate JVM-side pressure (code-cache/metaspace growth, GC
-    # churn, listener/UI state) that made late-suite numbers swing
-    # 3-6x vs isolated runs (similarity_threshold_pairs: 30.9 s
-    # in-suite vs 6.2 s isolated). Restarting the SparkContext every
-    # CHUNK queries (fresh executors, empty caches, new Arrow worker
-    # pool — then re-warmed) removes the noise source instead of
-    # adjudicating it after the fact.
-    chunk = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_CHUNK", "75")))
+    # Errors are recorded per query and the JSON line is ALWAYS emitted.
+    reps = bench_reps()
     timings: dict[str, float] = {}
     first_rep: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for qi, (name, fn) in enumerate(HEADLINE):
-        if qi and qi % chunk == 0:
-            print(f"# session restart at query {qi} (chunk={chunk})",
-                  file=sys.stderr)
-            spark.stop()
-            spark = get_spark("bench")
-            _warm_session(spark, sf_dir)
-            batch_probe.append(_batch_probe(spark, sf_dir))
-            print(f"# batch_probe[chunk {qi // chunk}]: "
-                  f"{batch_probe[-1]}s", file=sys.stderr)
-        # Per-query cache isolation: 60 headline queries in one session
-        # accumulate persisted frames (_emb, edge lists, shingle
-        # indexes...) until executor-memory pressure evicts/GC-churns
-        # whichever query runs late in the list (observed: an 8.5 s
-        # knn_pq_search in-suite vs 1.6 s isolated). Clearing BETWEEN
-        # queries keeps each number position-independent; reps of the
-        # SAME query still share their cache, preserving best-of-N's
-        # warm-rep semantics.
-        spark.catalog.clearCache()
-        best = None
-        for r in range(reps):
-            t0 = time.time()
-            try:
-                fn(spark, sf_dir).write.mode("overwrite") \
-                    .format("noop").save()
-                took = round(time.time() - t0, 3)
-                best = took if best is None else min(best, took)
-                if r == 0:
-                    first_rep[name] = took
-                print(f"# {name}[{r}]: {took}s", file=sys.stderr)
-            except Exception as exc:  # noqa: BLE001 — isolate & continue
-                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-                print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
-                break
-        if best is not None:
-            timings[name] = best
+    for name, fn in HEADLINE:
+        secs, err = time_query(spark, name, fn, sf_dir, reps)
+        if secs:
+            timings[name] = min(secs)
+            first_rep[name] = secs[0]
+        if err:
+            errors[name] = err
 
     try:
         relay = _relay_steady_state(spark, sf_dir)
@@ -577,7 +575,8 @@ def main() -> None:
     detail = {
         "sf": sf,
         "reps": reps,
-        "session_chunk": chunk,
+        # queries per session: the whole suite runs in one session
+        "session_chunk": len(HEADLINE),
         "queries": timings,
         "first_rep": first_rep,
         "errors": errors,
@@ -598,7 +597,7 @@ def main() -> None:
         "n_queries": len(timings),
         "sf": sf,
         "reps": reps,
-        "session_chunk": chunk,
+        "session_chunk": len(HEADLINE),
         # single-shot (rep-0) total: rounds 1-2 were single-shot, so this
         # is the like-for-like number for cross-round comparisons; the
         # headline "value" is best-of-reps from round 3 on.
@@ -609,10 +608,11 @@ def main() -> None:
         "first_rep_n": len(first_rep),
         "n_errors": len(errors),
         "cdc_relay_stream": relay,
-        # per-chunk batch ambient canary (VERDICT r11 task #4): one
-        # q1-shape probe timed after each fresh-session warm-up, so
-        # cross-round normalization has an instrument on the batch
-        # execution path itself (the relay canary is streaming-bound)
+        # batch ambient canary (VERDICT r11 task #4): one q1-shape
+        # probe timed after the session warm-up, so cross-round
+        # normalization has an instrument on the batch execution path
+        # itself (the relay canary is streaming-bound). A one-entry
+        # list: earlier rounds timed one probe per session restart.
         "batch_probe_sec": batch_probe,
         "detail_file": "bench_detail.json",
     }

@@ -66,10 +66,21 @@ def _dot(a, b) -> "F.Column":
 
 def _list2d(a):
     """Arrow list<double> column → (n, dims) float64 ndarray, ZERO
-    copies for the data buffer (flatten respects slice offsets; the
-    vectors are non-null fixed-width by the embeddings contract)."""
+    copies for the data buffer (flatten respects slice offsets).
+
+    Raises ValueError unless every vector is non-null and of one
+    width (the embeddings contract): a reshape alone would silently
+    re-cut ragged rows into wrong vectors. The check reads only the
+    validity count and the offsets buffer, O(rows)."""
     import numpy as np
 
+    if a.null_count:
+        raise ValueError(f"{a.null_count} null vector(s) in a fold input")
+    widths = np.diff(np.asarray(a.offsets))
+    if len(widths) and (widths != widths[0]).any():
+        raise ValueError(
+            f"ragged vectors in a fold input: widths "
+            f"{widths.min()}..{widths.max()}")
     return np.asarray(a.flatten()).reshape(len(a), -1)
 
 

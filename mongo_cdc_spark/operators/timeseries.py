@@ -1805,8 +1805,9 @@ def events_markov_stationary(spark: SparkSession,
     get a self-loop row (pr = 1) so inflow mass is conserved instead
     of silently dropping on the next iteration — the state set is
     prev UNION nxt and stationary_prob sums to 1 (round-7 ADVICE
-    fix). Fixed-point convergence (pi P = pi) is pinned in tests via
-    an independent eigen solve."""
+    fix); rows are emitted only for states reachable as nxt, as the
+    oracle's final GROUP BY nxt does. Fixed-point convergence
+    (pi P = pi) is pinned in tests via an independent eigen solve."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select("user_id", "event_type", "ts", "event_id",
@@ -1838,16 +1839,20 @@ def events_markov_stationary(spark: SparkSession,
     # engine (Spark hash-agg partial merge vs DuckDB's scan order) —
     # the 6-dp rounded readout is what the oracle checks, as before.
     rows = sorted(p.collect(), key=lambda r: (r["nxt"], r["prev"]))
+    # pi0 spreads over every source state; each step keeps only the
+    # states reachable as nxt (the oracle's GROUP BY nxt), so a type
+    # seen only as a user's first event drops out after step 1.
     states = sorted({r["prev"] for r in rows})
     w0 = 1.0 / len(states) if states else 0.0
     pi_d = {s: w0 for s in states}
     for _ in range(_STAT_ITERS):
-        nxt_w = {s: 0.0 for s in states}
+        nxt_w: dict[str, float] = {}
         for r in rows:
-            nxt_w[r["nxt"]] = nxt_w[r["nxt"]] + pi_d[r["prev"]] * r["pr"]
+            nxt_w[r["nxt"]] = (nxt_w.get(r["nxt"], 0.0)
+                               + pi_d.get(r["prev"], 0.0) * r["pr"])
         pi_d = nxt_w
     pi = spark.createDataFrame(
-        [(s, pi_d[s]) for s in states], "s string, w double")
+        sorted(pi_d.items()), "s string, w double")
     tot = ev.agg(F.count(F.lit(1)).alias("nt"))
     emp = (ev.groupBy("event_type")
            .agg(F.count(F.lit(1)).alias("c"))

@@ -47,6 +47,22 @@ ROCKSDB_STATE_CONF = {
 }
 
 
+# Share of physical memory the default driver heap may take. The JVM
+# also needs off-heap memory and every Python worker is a process of
+# its own, so a heap near the box's total gets the JVM OOM-killed by
+# the kernel (measured: a 32g heap on a 15 GB box died midway through
+# the test suite; 6g, i.e. 0.4 of it, passes the whole suite).
+_DRIVER_MEM_SHARE = 0.4
+_DRIVER_MEM_CAP_MB = 32 * 1024
+
+
+def default_driver_mem() -> str:
+    """Driver heap when $SPARK_GRAFT_DRIVER_MEM is unset:
+    min(32g, _DRIVER_MEM_SHARE of physical memory), in MiB."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(_DRIVER_MEM_CAP_MB, int(phys_mb * _DRIVER_MEM_SHARE))}m"
+
+
 def get_spark(app_name: str = "mongo_cdc_spark", master: str | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or get) a SparkSession with the engine's defaults."""
@@ -57,7 +73,7 @@ def get_spark(app_name: str = "mongo_cdc_spark", master: str | None = None,
     # a 70-query sf0.1 sweep killed the JVM at ~1 GB while the box had
     # >100 GiB free). Only effective at JVM launch; getOrCreate on an
     # existing session leaves the running heap unchanged.
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     builder = (SparkSession.builder.appName(app_name)
                .master(master or f"local[{cpus}]")
                .config("spark.driver.memory", mem)

@@ -674,3 +674,23 @@ def test_arrow_folds_bitwise_equal_hof_folds(spark, sf_dir):
          | ~hof_l2.eqNullSafe(_l2_arrow()(F.col("v1"), F.col("v2"))))
         .cast("int").alias("d")).agg(F.sum("d")).collect()[0][0]
     assert n_bad == 0
+
+
+def test_list2d_rejects_null_and_ragged_vectors():
+    """The Arrow folds reshape a list column by its row count, so a
+    ragged batch (widths 1 and 3 re-cut into two rows of 2) or a null
+    vector would silently fold the wrong numbers; `_list2d` must raise
+    instead, and still accept a sliced fixed-width batch."""
+    import numpy as np
+    import pyarrow as pa
+    import pytest
+
+    from mongo_cdc_spark.operators.similarity import _list2d
+
+    lt = pa.list_(pa.float64())
+    with pytest.raises(ValueError, match="ragged"):
+        _list2d(pa.array([[1.0], [1.0, 2.0, 3.0]], type=lt))
+    with pytest.raises(ValueError, match="null"):
+        _list2d(pa.array([[1.0, 2.0], None], type=lt))
+    ok = pa.array([[9.0], [1.0, 2.0], [3.0, 4.0]], type=lt).slice(1)
+    assert np.array_equal(_list2d(ok), [[1.0, 2.0], [3.0, 4.0]])

@@ -942,3 +942,45 @@ def test_hurst_rs_matches_python_reference(spark, sf_dir):
         assert abs(r.rs_mean - rs) < 1e-9
         assert abs(r.hurst_exponent - hurst) < 1e-9
         assert 0.0 < r.hurst_exponent < 1.0
+
+
+def test_markov_stationary_rows_match_oracle_for_source_only_type(
+        spark, tmp_path):
+    """A type seen only as a user's FIRST event is a chain source with
+    no inflow: the oracle's final GROUP BY nxt emits no row for it, so
+    the engine must not emit one either (it used to add a
+    stationary_prob = 0 row)."""
+    from datetime import datetime, timedelta
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mongo_cdc_spark.operators.timeseries import (
+        _stationary_oracle_sql, events_markov_stationary)
+
+    journeys = {1: ["entry", "view", "cart", "view"],
+                2: ["view", "cart", "buy"],
+                3: ["entry", "cart", "buy", "view"]}
+    t0 = datetime(2024, 1, 1)
+    rows = [(u, et, t0 + timedelta(minutes=i))
+            for u, types in journeys.items() for i, et in enumerate(types)]
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(rows)), pa.int64()),
+        "ts": pa.array([r[2] for r in rows], pa.timestamp("us")),
+        "user_id": pa.array([r[0] for r in rows], pa.int64()),
+        "event_type": [r[1] for r in rows],
+        "value": [1.0] * len(rows),
+        "props": ["{}"] * len(rows),
+    }), tmp_path / "events.parquet")
+
+    got = [tuple(r) for r in
+           events_markov_stationary(spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS FROM '{tmp_path}/events.parquet'")
+    want = con.sql(_stationary_oracle_sql()).fetchall()
+    con.close()
+    assert "entry" not in {r[0] for r in got}
+    assert [r[0] for r in got] == [r[0] for r in want]
+    for g, w in zip(got, want):
+        assert all(abs(a - b) < 1e-6 for a, b in zip(g[1:], w[1:]))

@@ -7,12 +7,12 @@ at 32 because 2-3 s queries are dominated by fixed per-query stage
 machinery, not data. This tool synthesizes an m× replica of the
 largest available fixture (disjoint key-shifted copies of every
 table — join fan-outs and group cardinalities per copy are preserved,
-nation/region stay shared) and re-times the hottest HEADLINE labels on
-it, so an 8-vs-32-core comparison measures computation that actually
-saturates cores.
+nation/region stay shared); re-timing the hottest HEADLINE labels on
+it with tools/retime.py makes an 8-vs-32-core comparison measure
+computation that actually saturates cores.
 
     python tools/scale_probe.py synth [sf_dir] [mult] [out_dir]
-    SPARK_GRAFT_CPUS=8 python tools/scale_probe.py run out_dir label...
+    SPARK_GRAFT_CPUS=8 python tools/retime.py <synth_dir> label...
 
 The probe is EVIDENCE tooling only: bench.py and the driver contract
 are untouched; nothing here persists results across runs (the synth
@@ -21,10 +21,7 @@ dir is an explicit argument, rebuilt at will).
 
 from __future__ import annotations
 
-import json
-import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -85,51 +82,17 @@ def synth(sf_dir: str, mult: int, out_dir: str) -> None:
     spark.stop()
 
 
-def run(sf_dir: str, labels: list[str]) -> None:
-    import bench
-    from mongo_cdc_spark.session import get_spark
-
-    by_label = dict(bench.HEADLINE)
-    unknown = [a for a in labels if a not in by_label]
-    if unknown:
-        print(f"unknown labels: {unknown}", file=sys.stderr)
-        sys.exit(2)
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
-    spark = get_spark("scale_probe")
-    bench._warm_session(spark, sf_dir)
-    out: dict[str, float] = {}
-    for name in labels:
-        spark.catalog.clearCache()
-        best = None
-        for r in range(reps):
-            t0 = time.time()
-            by_label[name](spark, sf_dir).write.mode("overwrite") \
-                .format("noop").save()
-            took = round(time.time() - t0, 3)
-            best = took if best is None else min(best, took)
-            print(f"# {name}[{r}]: {took}s", file=sys.stderr)
-        out[name] = best
-    print(json.dumps({
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        "sf_dir": sf_dir, "reps": reps, "queries": out,
-        "total_sec": round(sum(out.values()), 3)}))
-    spark.stop()
-
-
 def main() -> None:
     args = sys.argv[1:]
-    if not args or args[0] not in ("synth", "run"):
-        print(__doc__, file=sys.stderr)
-        sys.exit(2)
-    mode = args.pop(0)
-    if mode == "synth":
+    if args[:1] == ["synth"]:
+        args.pop(0)
         sf_dir = args[0] if args else "/root/testdata/sf0.1"
         mult = int(args[1]) if len(args) > 1 else 4
         out_dir = args[2] if len(args) > 2 else "/tmp/sf_synth"
         synth(sf_dir, mult, out_dir)
     else:
-        sf_dir = args.pop(0)
-        run(sf_dir, args)
+        print(__doc__, file=sys.stderr)
+        sys.exit(2)
 
 
 if __name__ == "__main__":

@@ -23,13 +23,13 @@ or scales super-linearly past the slack.
 from __future__ import annotations
 
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entrymod  # noqa: E402
+import bench  # noqa: E402
 from mongo_cdc_spark.session import get_spark  # noqa: E402
 
 # Per-query fixed overhead (planning, task dispatch, Arrow pool) that
@@ -70,28 +70,20 @@ def _sf_of(sf_dir: str) -> float | None:
 
 
 def _run_all(spark, sf_dir: str, reps: int):
-    """Best-of-reps per query: single-shot local timings swing with
-    scheduler noise and one transient stall (GC, a slow first Arrow
-    worker) would flag an innocent query; the minimum is the
-    steady-state estimate, same policy as bench.py."""
+    """Best-of-reps per query through bench.time_query: single-shot
+    local timings swing with scheduler noise and one transient stall
+    (GC, a slow first Arrow worker) would flag an innocent query; the
+    minimum is the steady-state estimate, same protocol as bench.py."""
     times: dict[str, float] = {}
     errors: dict[str, str] = {}
     for name, fn in entrymod.queries().items():
-        best = None
-        for _ in range(reps):
-            t0 = time.time()
-            try:
-                fn(spark, sf_dir).write.mode("overwrite") \
-                    .format("noop").save()
-                took = round(time.time() - t0, 2)
-                best = took if best is None else min(best, took)
-            except Exception as exc:  # noqa: BLE001 — sweep must finish
-                errors[name] = f"{type(exc).__name__}: {str(exc)[:200]}"
-                print(f"{name} ERROR {errors[name]}", flush=True)
-                break
-        if best is not None:
-            times[name] = best
-            print(f"{name} {best}s", flush=True)
+        secs, err = bench.time_query(spark, name, fn, sf_dir, reps)
+        if err:
+            errors[name] = err
+            print(f"{name} ERROR {err}", flush=True)
+        if secs:
+            times[name] = min(secs)
+            print(f"{name} {times[name]}s", flush=True)
     return times, errors
 
 
@@ -101,10 +93,9 @@ def main() -> int:
     base_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
     if not Path(base_dir).is_dir() or base_dir == sf_dir:
         base_dir = None
-    import os
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_SWEEP_REPS", "2")))
+    reps = bench.bench_reps()
     spark = get_spark("scale_sweep")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    bench._warm_session(spark, base_dir or sf_dir)
 
     base_times: dict[str, float] = {}
     base_errors: dict[str, str] = {}
@@ -156,26 +147,12 @@ def main() -> int:
         # spike (0.6s base, 5.66s spike -> 34x after fixed-cost
         # subtraction; an isolated best-of-3 measured it flat). A
         # genuine quadratic survives re-timing; a spike does not.
-        # Re-time in a CLEAN-CACHE state: by the end of a 392-query
-        # sweep the session carries hundreds of persisted frames and
-        # tens of thousands of stages, and the round-9 close showed
-        # the LAST queries in sweep order reading 10-40x their
-        # fresh-session times purely from that pressure — a re-time
-        # inside the same polluted session can never clear such a
-        # flag. Clearing the cache (persists re-materialize on
-        # demand) restores the measurement the gate is meant to take.
-        if candidates:
-            spark.catalog.clearCache()
+        # time_query re-times in a clean-cache state; an error here
+        # was already recorded by the main pass.
         for k in candidates:
-            fn = entrymod.queries()[k]
-            for _ in range(2):
-                t0 = time.time()
-                try:
-                    fn(spark, sf_dir).write.mode("overwrite") \
-                        .format("noop").save()
-                except Exception:  # noqa: BLE001 — main pass recorded it
-                    break
-                times[k] = min(times[k], round(time.time() - t0, 2))
+            secs, _ = bench.time_query(spark, k, entrymod.queries()[k],
+                                       sf_dir, reps)
+            times[k] = min([times[k], *secs])
             small = max(base_times[k] - FIXED_SEC, FLOOR)
             ratio = max(times[k] - FIXED_SEC, 0.0) / small
             line = (f"{k} base={base_times[k]}s main={times[k]}s "
