@@ -9,9 +9,12 @@ The `bson` Python package is not available in this environment, so this
 is a small pure-Python implementation covering the JSON-representable
 subset our sources produce (our change events arrive as JSON text, so
 ObjectId/Decimal128/Binary wire types are out of scope; they would slot
-into `_canonicalize` if a true BSON source were wired in). Exposed as one
-Arrow UDF that encodes an event's key payload and value from one decode —
-the one custom function the core pipeline needs (SURVEY.md §1.5).
+into `_canonicalize` if a true BSON source were wired in).
+
+The relay itself encodes with the Java UDF `jvm/ExtJsonKeyValue.java`,
+so no Python runs on its executors. This module is the driver-side
+helper, and `event_key_value` is the reference that the Java UDF must
+match byte for byte (tests/test_extjson.py).
 """
 
 from __future__ import annotations
@@ -19,10 +22,6 @@ from __future__ import annotations
 import json
 import math
 from typing import Any
-
-import pyarrow as pa
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _INT32_MIN, _INT32_MAX = -(2 ** 31), 2 ** 31 - 1
 
@@ -107,14 +106,3 @@ def event_key_value(json_text: str | None) -> tuple[str | None, str | None]:
     key = ev.get("documentKey")
     return None if key is None else _encode(key), _encode(ev)
 
-
-@F.arrow_udf(T.StructType([T.StructField("payload", T.StringType()),
-                           T.StructField("value", T.StringType())]))
-def event_ext_json_udf(events: pa.Array) -> pa.Array:
-    """Arrow-batched event_key_value: the key payload and the value of
-    each event, as struct<payload, value>."""
-    pairs = [event_key_value(t) for t in events.to_pylist()]
-    return pa.StructArray.from_arrays(
-        [pa.array([p for p, _ in pairs], pa.string()),
-         pa.array([v for _, v in pairs], pa.string())],
-        names=["payload", "value"])

@@ -5,11 +5,12 @@ Covers operators #2-#6 of SURVEY.md §2.1 (reference: /root/reference/main.go):
   field extraction        (main.go:111-116)  → Catalyst projection
   dynamic topic routing   (main.go:113)      → concat_ws("." , db, coll)
   Connect key envelope    (main.go:123-131)  → to_json(struct(...)) built-ins
-  Ext-JSON key + value    (main.go:117,138)  → event_ext_json_udf (Arrow UDF)
+  Ext-JSON key + value    (main.go:117,138)  → one Java UDF call
+                                               (jvm/ExtJsonKeyValue.java)
 
 The whole transform is shuffle-free: Scan → Generate(from_json) → Project
-→ UDF → Sink is a single Spark stage at any scale (the UDF is, by design,
-the lone Python hop).
+→ UDF → Sink is a single Spark stage at any scale, and it runs entirely in
+the JVM: no relay plan has a Python eval node.
 """
 
 from __future__ import annotations
@@ -18,8 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mongo_cdc_spark.cdc.extjson import event_ext_json_udf
 from mongo_cdc_spark.cdc.schema import CHANGE_EVENT_SCHEMA, CORRUPT_COL
+from mongo_cdc_spark.session import ext_json_function
 
 
 def valid_event() -> Column:
@@ -66,12 +67,15 @@ def with_topic(events: DataFrame) -> DataFrame:
         "topic", F.concat_ws(".", F.col("ns.db"), F.col("ns.coll")))
 
 
-def _ext_json() -> Column:
-    """struct<payload, value>: key and value share this one UDF call."""
-    return event_ext_json_udf(F.to_json(F.struct(
-        F.col("_id"), F.col("operationType"), F.col("clusterTime"),
-        F.col("ns"), F.col("documentKey"), F.col("fullDocument"),
-    )))
+def _ext_json(events: DataFrame) -> Column:
+    """struct<payload, value> of each event. Key and value use the same
+    expression, which Spark evaluates once per row (common
+    subexpression elimination), so they share one UDF call."""
+    return F.call_function(
+        ext_json_function(events.sparkSession), F.to_json(F.struct(
+            F.col("_id"), F.col("operationType"), F.col("clusterTime"),
+            F.col("ns"), F.col("documentKey"), F.col("fullDocument"),
+        )))
 
 
 def connect_key_envelope(events: DataFrame) -> DataFrame:
@@ -80,7 +84,7 @@ def connect_key_envelope(events: DataFrame) -> DataFrame:
     {"schema":{"type":"string","optional":false},"payload":"<ext json of
     documentKey>"} — byte-compatible with the JsonConverter wire format
     the reference's docker-compose sink chain consumes
-    (docker-compose.yml:111-112). Pure built-ins except the Ext-JSON hop.
+    (docker-compose.yml:111-112). Built-ins plus the Ext-JSON Java UDF.
     """
     return events.withColumn(
         "key",
@@ -89,14 +93,14 @@ def connect_key_envelope(events: DataFrame) -> DataFrame:
                 F.lit("string").alias("type"),
                 F.lit(False).alias("optional"),
             ).alias("schema"),
-            _ext_json().getField("payload").alias("payload"),
+            _ext_json(events).getField("payload").alias("payload"),
         )),
     )
 
 
 def ext_json_value(events: DataFrame) -> DataFrame:
     """Whole-event canonical Extended JSON value (main.go:138-142)."""
-    return events.withColumn("value", _ext_json().getField("value"))
+    return events.withColumn("value", _ext_json(events).getField("value"))
 
 
 def to_kafka_records(parsed: DataFrame) -> DataFrame:

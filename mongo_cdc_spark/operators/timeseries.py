@@ -1732,6 +1732,10 @@ def stats_twoway_fixed_effects(spark: SparkSession,
 # -------------------------------------- Markov stationary distribution
 
 _STAT_ITERS = 20
+# Most event types the chain may have: its |types|^2 transition matrix is
+# collected and iterated on the driver, so past this it is data, not a
+# model (256 types: <= 65,536 matrix rows, ~1.3M driver steps).
+_MARKOV_MAX_TYPES = 256
 
 
 def _stationary_oracle_sql() -> str:
@@ -1838,6 +1842,13 @@ def events_markov_stationary(spark: SparkSession,
     # ran; accumulation order within a step was never pinned by either
     # engine (Spark hash-agg partial merge vs DuckDB's scan order) —
     # the 6-dp rounded readout is what the oracle checks, as before.
+    n_types = (tc.select(F.explode(F.array("prev", "nxt")))
+               .distinct().count())
+    if n_types > _MARKOV_MAX_TYPES:
+        raise ValueError(
+            f"events_markov_stationary: {n_types} event types exceed the "
+            f"{_MARKOV_MAX_TYPES}-type cap on the driver-side "
+            f"|types|^2 transition matrix")
     rows = sorted(p.collect(), key=lambda r: (r["nxt"], r["prev"]))
     # pi0 spreads over every source state; each step keeps only the
     # states reachable as nxt (the oracle's GROUP BY nxt), so a type

@@ -4,12 +4,25 @@ Local mode is for tests (local[32], single JVM); every config below is
 also what we would ship on a real cluster: AQE for runtime re-planning
 (skew joins, partition coalescing), UTC session timezone (oracle parity
 and sane event-time semantics), Arrow for the pandas-UDF slow path.
+
+The relay's Ext-JSON encoder is a Java UDF (`jvm/ExtJsonKeyValue.java`):
+get_spark compiles it once with the running JDK's javac into a jar cached
+under $XDG_CACHE_HOME/mongo_cdc_spark, keyed by the source's hash, and
+registers it in every session it returns.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
+from pathlib import Path
 
+from pyspark.errors import AnalysisException
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Scale posture (SURVEY.md §7 M4): these settings are chosen so the same
@@ -63,6 +76,74 @@ def default_driver_mem() -> str:
     return f"{min(_DRIVER_MEM_CAP_MB, int(phys_mb * _DRIVER_MEM_SHARE))}m"
 
 
+EXT_JSON_SOURCE = (Path(__file__).resolve().parent
+                   / "jvm" / "ExtJsonKeyValue.java")
+EXT_JSON_CLASS = "mongo_cdc_spark.jvm.ExtJsonKeyValue"
+EXT_JSON_FUNCTION = "mongo_cdc_ext_json_key_value"
+_EXT_JSON_TYPE = "struct<payload:string,value:string>"
+
+
+def _find_javac() -> str | None:
+    """The javac beside the java Spark launches: $JAVA_HOME's, else PATH's."""
+    home = os.environ.get("JAVA_HOME")
+    if home:
+        javac = os.path.join(home, "bin", "javac")
+        return javac if os.access(javac, os.X_OK) else None
+    return shutil.which("javac")
+
+
+def ext_json_jar() -> Path:
+    """The compiled Ext-JSON UDF in $XDG_CACHE_HOME/mongo_cdc_spark
+    (default ~/.cache), built on the first call for each source hash.
+    The jar is written under a temporary name and renamed into place, so
+    concurrent processes never see a partial file."""
+    src = EXT_JSON_SOURCE.read_bytes()
+    # outside the checkout, and outside $TMPDIR, which benchmark runs delete
+    cache = Path(os.environ.get("XDG_CACHE_HOME")
+                 or Path.home() / ".cache") / "mongo_cdc_spark"
+    jar = cache / f"ext-json-{hashlib.sha256(src).hexdigest()[:16]}.jar"
+    if jar.is_file():
+        return jar
+    javac = _find_javac()
+    if javac is None:
+        raise RuntimeError(
+            "mongo_cdc_spark needs a JDK (javac) to build its Ext-JSON UDF, "
+            "and none was found in $JAVA_HOME/bin or on PATH; install a JDK "
+            "17+ or point JAVA_HOME at one")
+    cache.mkdir(parents=True, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=cache) as tmp:
+        classes = Path(tmp) / "classes"
+        done = subprocess.run(
+            [javac, "--release", "17", "-encoding", "UTF-8", "-nowarn",
+             "-cp", str(Path(_find_spark_home()) / "jars" / "*"),
+             "-d", str(classes), str(EXT_JSON_SOURCE)],
+            capture_output=True, text=True)
+        if done.returncode != 0:
+            raise RuntimeError(f"javac failed on {EXT_JSON_SOURCE}:\n"
+                               f"{done.stderr}")
+        part = Path(tmp) / jar.name
+        with zipfile.ZipFile(part, "w") as z:
+            for f in sorted(classes.rglob("*.class")):
+                z.write(f, f.relative_to(classes).as_posix())
+        os.replace(part, jar)
+    return jar
+
+
+def ext_json_function(spark: SparkSession) -> str:
+    """Name of the Ext-JSON key/value function in `spark`, registered on
+    first use. A session that get_spark did not start lacks the jar on
+    its classpath, so it is added to that session first."""
+    if not spark.catalog.functionExists(EXT_JSON_FUNCTION):
+        try:
+            spark.udf.registerJavaFunction(
+                EXT_JSON_FUNCTION, EXT_JSON_CLASS, _EXT_JSON_TYPE)
+        except AnalysisException:          # class not on the classpath
+            spark.sql(f"ADD JAR '{ext_json_jar()}'")
+            spark.udf.registerJavaFunction(
+                EXT_JSON_FUNCTION, EXT_JSON_CLASS, _EXT_JSON_TYPE)
+    return EXT_JSON_FUNCTION
+
+
 def get_spark(app_name: str = "mongo_cdc_spark", master: str | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or get) a SparkSession with the engine's defaults."""
@@ -77,11 +158,13 @@ def get_spark(app_name: str = "mongo_cdc_spark", master: str | None = None,
     builder = (SparkSession.builder.appName(app_name)
                .master(master or f"local[{cpus}]")
                .config("spark.driver.memory", mem)
-               .config("spark.driver.maxResultSize", "4g"))
+               .config("spark.driver.maxResultSize", "4g")
+               .config("spark.jars", str(ext_json_jar())))
     for k, v in _BASE_CONF.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ext_json_function(spark)
     return spark

@@ -299,9 +299,11 @@ def test_relay_golden_bytes(golden_raw):
 
 
 @pytest.mark.parametrize("build", ["records", "key_envelope"])
-def test_relay_plan_parses_once_with_one_python_hop(golden_raw, build):
-    """Each event is decoded once by from_json and once in Python: the
-    key and the value share one UDF call in one ArrowEvalPython node."""
+def test_relay_plan_parses_once_with_no_python_eval(golden_raw, build):
+    """Each event is decoded once by from_json and once by the Java
+    Ext-JSON UDF, with no Python eval node anywhere in the plan: the key
+    and the value share one UDF call per row (whole-stage codegen
+    evaluates the common subexpression once)."""
     from mongo_cdc_spark.cdc.transform import (
         connect_key_envelope, with_topic)
 
@@ -310,7 +312,44 @@ def test_relay_plan_parses_once_with_one_python_hop(golden_raw, build):
           else connect_key_envelope(with_topic(parsed)))
     plan = _executed_plan(df)
     assert plan.count("from_json(") == 1
-    assert plan.count("ArrowEvalPython") == 1
-    assert plan.count("event_ext_json_udf(") == 1
-    assert "pythonUDF1" not in plan
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert plan.count(node) == 0, node
+    jvm = df.sparkSession._jvm
+    codegen = jvm.org.apache.spark.sql.execution.debug.package \
+        .codegenString(df._jdf.queryExecution().executedPlan())
+    assert codegen.count("/* udf */") == 1
 
+
+
+_FOREIGN_SESSION = """
+import sys
+from pyspark.sql import SparkSession
+sys.path.insert(0, sys.argv[1])
+from mongo_cdc_spark.cdc.transform import parse_change_events, to_kafka_records
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.driver.memory", "1g")
+         .config("spark.ui.enabled", "false").getOrCreate())
+raw = spark.createDataFrame([(sys.argv[2],)], "value string")
+print(to_kafka_records(parse_change_events(raw)).collect()[0].value)
+spark.stop()
+"""
+
+
+def test_relay_runs_in_a_session_get_spark_did_not_start(tmp_path):
+    """A caller's own SparkSession lacks the Ext-JSON jar on its
+    classpath; the relay adds the jar on first use instead of failing
+    to load the UDF class."""
+    import os
+    import subprocess
+    import sys
+
+    line = json.dumps(_event(full='{"qty": 3, "price": 9.5}'))
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    done = subprocess.run(
+        [sys.executable, "-c", _FOREIGN_SESSION,
+         str(Path(__file__).resolve().parent.parent), line],
+        capture_output=True, text=True, timeout=300, env=env)
+    assert done.returncode == 0, done.stderr[-2000:]
+    value = json.loads(done.stdout.strip().splitlines()[-1])
+    assert value["fullDocument"] == {"qty": {"$numberInt": "3"},
+                                     "price": {"$numberDouble": "9.5"}}

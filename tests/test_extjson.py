@@ -1,15 +1,21 @@
 """Unit tests for the canonical Extended JSON v2 encoder — the one
 custom serializer in the CDC path (reference: main.go:117,138 uses
-bson.MarshalExtJSON(canonical=true); our rules mirror bson.json_util)."""
+bson.MarshalExtJSON(canonical=true); our rules mirror bson.json_util).
+The relay runs the Java UDF; `extjson.event_key_value` is its reference,
+and the differential tests below hold the two byte-equal."""
 
 import json
 import math
+
+import pytest
+from pyspark.sql import functions as F
 
 from mongo_cdc_spark.cdc.extjson import (
     _canonicalize,
     event_key_value,
     to_canonical_ext_json,
 )
+from mongo_cdc_spark.session import ext_json_function
 
 
 def _reference(json_text: str) -> str:
@@ -171,8 +177,87 @@ try:
         payload = None if expected["documentKey"] is None else _reference(key)
         assert event_key_value(text) == (
             payload, _reference(json.dumps(expected)))
+
+    def _event_text(key: str, doc: str, deleted: bool) -> str:
+        ev = {"operationType": "update", "documentKey": json.loads(key)}
+        if not deleted:
+            ev["fullDocument"] = doc
+        return json.dumps(ev)
+
+    @settings(max_examples=30, deadline=None)
+    @given(st.lists(st.tuples(_json_texts, _json_texts | _strings,
+                              st.booleans()), min_size=1, max_size=40))
+    def test_property_jvm_udf_matches_event_key_value(spark, events):
+        """The Java UDF the relay runs gives the same (payload, value)
+        bytes as the Python reference, for every generated event."""
+        texts = [_event_text(*e) for e in events]
+        assert _jvm_key_value(spark, texts) == [
+            event_key_value(t) for t in texts]
 except ImportError:  # pragma: no cover - hypothesis is in this image
     pass
+
+
+def _jvm_key_value(spark, texts: list[str]) -> list[tuple]:
+    """(payload, value) of each event text from the Java UDF, run on a
+    small DataFrame."""
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    kv = F.call_function(ext_json_function(spark), F.col("t"))
+    rows = df.select("i", kv.getField("payload").alias("p"),
+                     kv.getField("value").alias("v")).collect()
+    return [(r.p, r.v) for r in sorted(rows, key=lambda r: r.i)]
+
+
+def _full(doc_text: str) -> str:
+    """An event whose fullDocument is `doc_text`, as the envelope keeps
+    it: a JSON string."""
+    return json.dumps({"documentKey": {"_id": "k"}, "fullDocument": doc_text})
+
+
+_EDGE_EVENTS = {
+    "int32_edges": _full('{"a":2147483647,"b":2147483648,"c":-2147483648,'
+                         '"d":-2147483649,"z":-0,"y":0}'),
+    "int64_edges": _full('[9223372036854775807,9223372036854775808,'
+                         '-9223372036854775808,-9223372036854775809]'),
+    "uint64_edges": _full('[18446744073709551615,18446744073709551616,'
+                          '-18446744073709551616]'),
+    "doubles": _full('[-0, -0.0, 0.0, 1e400, -1e400, 5e-324, 1e16, 1e22,'
+                     ' 1e23, 2.82879384806159e17, 9007199254740992.0,'
+                     ' 9007199254740993.0, 1.7976931348623157e308,'
+                     ' 2.2250738585072014e-308, 0.1, 1e-5, 0.0001, 1.5e-4,'
+                     ' 123456789.125, 1E+2, 2.5e-3]'),
+    "constants": _full('{"n":NaN,"p":Infinity,"m":-Infinity}'),
+    "plus_infinity_is_not_json": _full('{"p":+Infinity}'),
+    "inf_is_not_json": _full('[-INF]'),
+    "non_ascii": _full(r'{"s":"h\u00e9llo \u4e2d","t":"'
+                       + "h\u00e9llo \u4e2d" + '"}'),
+    "astral": _full(r'{"s":"\ud83d\ude00","t":"'
+                    + "\U0001F600\U00010348" + '"}'),
+    "lone_surrogate": _full(r'{"s":"\ud800x","t":"\udfff"}'),
+    "del_and_control": _full(r'{"s":"\u007f' + "\x7f"
+                             + r'\u0001\u001f\b\f\n\r\t\"\\\/"}'),
+    "duplicate_keys": _full('{"a":1,"b":{"c":1,"c":2.5},"a":"last"}'),
+    "duplicate_top_level_key":
+        r'{"fullDocument":"x","documentKey":{"_id":1,"_id":2},'
+        r'"fullDocument":"{\"a\":1}"}',
+    "not_json": _full("plain text"),
+    "truncated_json": _full('{"a": 1'),
+    "trailing_data": _full("[1] 2"),
+    "empty_string": _full(""),
+    "scalar_number": _full("5"),
+    "scalar_string": _full('"abc"'),
+    "scalar_null": _full("null"),
+    "scalar_true": _full(" true "),
+    "object_not_string": '{"documentKey":{"_id":"k"},"fullDocument":{"x":1.5}}',
+    "no_document_key": '{"operationType":"insert","fullDocument":"{}"}',
+    "null_document_key": '{"documentKey":null,"operationType":"delete"}',
+    "empty_containers": _full('{"a":{},"b":[],"c":[[],{}]}'),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_EDGE_EVENTS))
+def test_jvm_udf_matches_event_key_value_on_edges(spark, name):
+    text = _EDGE_EVENTS[name]
+    assert _jvm_key_value(spark, [text]) == [event_key_value(text)]
 
 
 def test_event_key_value_without_document_key():

@@ -5,6 +5,7 @@ check meaning)."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from mongo_cdc_spark.operators import timeseries
 
@@ -984,3 +985,26 @@ def test_markov_stationary_rows_match_oracle_for_source_only_type(
     assert [r[0] for r in got] == [r[0] for r in want]
     for g, w in zip(got, want):
         assert all(abs(a - b) < 1e-6 for a, b in zip(g[1:], w[1:]))
+
+
+def test_markov_stationary_refuses_types_past_cap(spark, tmp_path):
+    """The transition matrix is collected to the driver, so a type set
+    past the cap must fail loudly before that collect."""
+    from datetime import datetime, timedelta
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = timeseries._MARKOV_MAX_TYPES + 1
+    t0 = datetime(2024, 1, 1)
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(n), pa.int64()),
+        "ts": pa.array([t0 + timedelta(minutes=i) for i in range(n)],
+                       pa.timestamp("us")),
+        "user_id": pa.array([1] * n, pa.int64()),
+        "event_type": [f"t{i:04d}" for i in range(n)],
+        "value": [1.0] * n,
+        "props": ["{}"] * n,
+    }), tmp_path / "events.parquet")
+    with pytest.raises(ValueError, match="event types exceed"):
+        timeseries.events_markov_stationary(spark, str(tmp_path))

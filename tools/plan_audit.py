@@ -9,9 +9,9 @@ Known blind spot: a `localCheckpoint` replaces its subtree with an RDD
 scan in the printed plan, so features UPSTREAM of a checkpoint are
 invisible here, and building such a query's DataFrame executes the
 checkpoint jobs at construction time. Since the round-12 persist sweep
-this is confined to the 17 allowlisted load-bearing sites
+this is confined to the allowlisted load-bearing sites
 (tests/test_checkpoint_guard.py — iterative supersteps + CDC
-read-overwrite); everything else persists, and persisted subtrees
+read points); everything else persists, and persisted subtrees
 STAY visible (InMemoryRelation lineage is printed once and deduped by
 _strip_cached below, and construction runs no jobs). The
 single-partition-window class is
@@ -40,8 +40,9 @@ sys.path.insert(0, str(REPO))
 import __spark_entry__ as entrymod  # noqa: E402
 from mongo_cdc_spark.session import get_spark  # noqa: E402
 
-# Python eval is DECLARED (intentional) in exactly these queries:
-PYTHON_OK = {"cdc_key_envelope", "multimodal_fake_decode",
+# Python eval is DECLARED (intentional) in exactly these queries. The
+# CDC relay path has none: its Ext-JSON key/value encoder is a Java UDF.
+PYTHON_OK = {"multimodal_fake_decode",
              "multimodal_real_decode", "knn_lsh_hyperplane",
              "udaf_geomean_discount",
              # the real WAV decoder (stdlib `wave`) runs in the one
