@@ -1732,10 +1732,11 @@ def stats_twoway_fixed_effects(spark: SparkSession,
 # -------------------------------------- Markov stationary distribution
 
 _STAT_ITERS = 20
-# Most event types the chain may have: its |types|^2 transition matrix is
-# collected and iterated on the driver, so past this it is data, not a
-# model (256 types: <= 65,536 matrix rows, ~1.3M driver steps).
-_MARKOV_MAX_TYPES = 256
+# Most transitions (nonzero matrix cells) the chain may have: the matrix
+# is collected and iterated on the driver, so past this it is data, not a
+# model. 256**2 is the dense matrix of 256 event types (~1.3M driver
+# steps); a chain past it has more than 256 types.
+_MARKOV_MAX_TRANSITIONS = 256 ** 2
 
 
 def _stationary_oracle_sql() -> str:
@@ -1842,14 +1843,15 @@ def events_markov_stationary(spark: SparkSession,
     # ran; accumulation order within a step was never pinned by either
     # engine (Spark hash-agg partial merge vs DuckDB's scan order) —
     # the 6-dp rounded readout is what the oracle checks, as before.
-    n_types = (tc.select(F.explode(F.array("prev", "nxt")))
-               .distinct().count())
-    if n_types > _MARKOV_MAX_TYPES:
+    # The collect itself is bounded: one row past the cap proves the
+    # matrix too big, at no extra job.
+    rows = p.limit(_MARKOV_MAX_TRANSITIONS + 1).collect()
+    if len(rows) > _MARKOV_MAX_TRANSITIONS:
         raise ValueError(
-            f"events_markov_stationary: {n_types} event types exceed the "
-            f"{_MARKOV_MAX_TYPES}-type cap on the driver-side "
-            f"|types|^2 transition matrix")
-    rows = sorted(p.collect(), key=lambda r: (r["nxt"], r["prev"]))
+            f"events_markov_stationary: more than {_MARKOV_MAX_TRANSITIONS} "
+            f"transitions exceed the cap on the driver-side transition "
+            f"matrix")
+    rows.sort(key=lambda r: (r["nxt"], r["prev"]))
     # pi0 spreads over every source state; each step keeps only the
     # states reachable as nxt (the oracle's GROUP BY nxt), so a type
     # seen only as a user's first event drops out after step 1.

@@ -5,10 +5,11 @@ also what we would ship on a real cluster: AQE for runtime re-planning
 (skew joins, partition coalescing), UTC session timezone (oracle parity
 and sane event-time semantics), Arrow for the pandas-UDF slow path.
 
-The relay's Ext-JSON encoder is a Java UDF (`jvm/ExtJsonKeyValue.java`):
-get_spark compiles it once with the running JDK's javac into a jar cached
-under $XDG_CACHE_HOME/mongo_cdc_spark, keyed by the source's hash, and
-registers it in every session it returns.
+The relay's Ext-JSON encoder is a Java UDF (`jvm/ExtJsonKeyValue.java`).
+The first relay plan built in a session compiles it with the running
+JDK's javac into a jar cached under $XDG_CACHE_HOME/mongo_cdc_spark (once
+per source and Spark classpath), adds the jar and registers the function
+(ext_json_function). Sessions that never build a relay plan need no JDK.
 """
 
 from __future__ import annotations
@@ -21,7 +22,6 @@ import tempfile
 import zipfile
 from pathlib import Path
 
-from pyspark.errors import AnalysisException
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
@@ -94,14 +94,21 @@ def _find_javac() -> str | None:
 
 def ext_json_jar() -> Path:
     """The compiled Ext-JSON UDF in $XDG_CACHE_HOME/mongo_cdc_spark
-    (default ~/.cache), built on the first call for each source hash.
-    The jar is written under a temporary name and renamed into place, so
-    concurrent processes never see a partial file."""
-    src = EXT_JSON_SOURCE.read_bytes()
+    (default ~/.cache), built on the first call for each key. The key
+    hashes the source and the names of the Spark jars it compiles
+    against, so a Spark upgrade (which brings its own Jackson) rebuilds
+    it; `--release 17` pins the bytecode and API target, so the JDK that
+    compiles it is not part of the key. The jar is written under a
+    temporary name and renamed into place, so concurrent processes never
+    see a partial file."""
+    spark_jars = Path(_find_spark_home()) / "jars"
+    key = hashlib.sha256(EXT_JSON_SOURCE.read_bytes())
+    for name in sorted(os.listdir(spark_jars)):
+        key.update(b"\0" + name.encode())
     # outside the checkout, and outside $TMPDIR, which benchmark runs delete
     cache = Path(os.environ.get("XDG_CACHE_HOME")
                  or Path.home() / ".cache") / "mongo_cdc_spark"
-    jar = cache / f"ext-json-{hashlib.sha256(src).hexdigest()[:16]}.jar"
+    jar = cache / f"ext-json-{key.hexdigest()[:16]}.jar"
     if jar.is_file():
         return jar
     javac = _find_javac()
@@ -115,7 +122,7 @@ def ext_json_jar() -> Path:
         classes = Path(tmp) / "classes"
         done = subprocess.run(
             [javac, "--release", "17", "-encoding", "UTF-8", "-nowarn",
-             "-cp", str(Path(_find_spark_home()) / "jars" / "*"),
+             "-cp", str(spark_jars / "*"),
              "-d", str(classes), str(EXT_JSON_SOURCE)],
             capture_output=True, text=True)
         if done.returncode != 0:
@@ -130,17 +137,14 @@ def ext_json_jar() -> Path:
 
 
 def ext_json_function(spark: SparkSession) -> str:
-    """Name of the Ext-JSON key/value function in `spark`, registered on
-    first use. A session that get_spark did not start lacks the jar on
-    its classpath, so it is added to that session first."""
+    """Name of the Ext-JSON key/value function in `spark`. On first use
+    in a session the jar is built (or taken from the cache), added to the
+    session and the function registered; any session works, whoever
+    started it."""
     if not spark.catalog.functionExists(EXT_JSON_FUNCTION):
-        try:
-            spark.udf.registerJavaFunction(
-                EXT_JSON_FUNCTION, EXT_JSON_CLASS, _EXT_JSON_TYPE)
-        except AnalysisException:          # class not on the classpath
-            spark.sql(f"ADD JAR '{ext_json_jar()}'")
-            spark.udf.registerJavaFunction(
-                EXT_JSON_FUNCTION, EXT_JSON_CLASS, _EXT_JSON_TYPE)
+        spark.sql(f"ADD JAR '{ext_json_jar()}'")
+        spark.udf.registerJavaFunction(
+            EXT_JSON_FUNCTION, EXT_JSON_CLASS, _EXT_JSON_TYPE)
     return EXT_JSON_FUNCTION
 
 
@@ -158,13 +162,11 @@ def get_spark(app_name: str = "mongo_cdc_spark", master: str | None = None,
     builder = (SparkSession.builder.appName(app_name)
                .master(master or f"local[{cpus}]")
                .config("spark.driver.memory", mem)
-               .config("spark.driver.maxResultSize", "4g")
-               .config("spark.jars", str(ext_json_jar())))
+               .config("spark.driver.maxResultSize", "4g"))
     for k, v in _BASE_CONF.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    ext_json_function(spark)
     return spark

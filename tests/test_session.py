@@ -4,6 +4,7 @@ Spark."""
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pytest
 
@@ -75,6 +76,25 @@ def test_ext_json_jar_rebuilds_when_the_source_changes(monkeypatch,
     assert len(runs) == 2
 
 
+def test_ext_json_jar_rebuilds_when_the_spark_jars_change(monkeypatch,
+                                                          tmp_path):
+    """A Spark upgrade brings other jars (its own Jackson among them);
+    a jar compiled against the old ones must not be reused."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    real = Path(session._find_spark_home()) / "jars"
+    home = tmp_path / "spark"
+    (home / "jars").mkdir(parents=True)
+    for jar in real.iterdir():
+        (home / "jars" / jar.name).symlink_to(jar)
+    monkeypatch.setattr(session, "_find_spark_home", lambda: str(home))
+    runs = _count_javac_runs(monkeypatch)
+    first = session.ext_json_jar()
+    (home / "jars" / "jackson-core-99.0.jar").symlink_to(
+        next(real.glob("jackson-core-*.jar")))
+    second = session.ext_json_jar()
+    assert first != second and len(runs) == 2
+
+
 def test_ext_json_jar_without_javac_says_a_jdk_is_needed(monkeypatch,
                                                          tmp_path):
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
@@ -95,7 +115,6 @@ def test_ext_json_jar_concurrent_builds_agree(tmp_path):
     import subprocess
     import sys
     import zipfile
-    from pathlib import Path
 
     repo = Path(__file__).resolve().parent.parent
     env = dict(os.environ, XDG_CACHE_HOME=str(tmp_path))

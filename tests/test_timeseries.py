@@ -987,24 +987,33 @@ def test_markov_stationary_rows_match_oracle_for_source_only_type(
         assert all(abs(a - b) < 1e-6 for a, b in zip(g[1:], w[1:]))
 
 
-def test_markov_stationary_refuses_types_past_cap(spark, tmp_path):
-    """The transition matrix is collected to the driver, so a type set
-    past the cap must fail loudly before that collect."""
+def test_markov_stationary_refuses_a_matrix_past_cap(spark, tmp_path):
+    """The transition matrix is collected to the driver, so a chain with
+    more transitions than the cap must fail loudly, not be collected:
+    257 types, every ordered pair of them seen (257**2 > 256**2)."""
     from datetime import datetime, timedelta
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    n = timeseries._MARKOV_MAX_TYPES + 1
+    n = 257
+    assert n * n > timeseries._MARKOV_MAX_TRANSITIONS
+    # user a visits a, 0, a, 1, ..., a, n-1: transitions (a, k) for all k
+    users, types = [], []
+    for a in range(n):
+        for k in range(n):
+            users += [a, a]
+            types += [a, k]
     t0 = datetime(2024, 1, 1)
+    m = len(types)
     pq.write_table(pa.table({
-        "event_id": pa.array(range(n), pa.int64()),
-        "ts": pa.array([t0 + timedelta(minutes=i) for i in range(n)],
+        "event_id": pa.array(range(m), pa.int64()),
+        "ts": pa.array([t0 + timedelta(seconds=i) for i in range(m)],
                        pa.timestamp("us")),
-        "user_id": pa.array([1] * n, pa.int64()),
-        "event_type": [f"t{i:04d}" for i in range(n)],
-        "value": [1.0] * n,
-        "props": ["{}"] * n,
+        "user_id": pa.array(users, pa.int64()),
+        "event_type": [f"t{t:04d}" for t in types],
+        "value": [1.0] * m,
+        "props": ["{}"] * m,
     }), tmp_path / "events.parquet")
-    with pytest.raises(ValueError, match="event types exceed"):
+    with pytest.raises(ValueError, match="transitions exceed the cap"):
         timeseries.events_markov_stationary(spark, str(tmp_path))
