@@ -29,564 +29,35 @@ _MODULES = (cdc_batch, relational, tpch_full, dedup, similarity, text,
             multimodal, training, skew, layout, quality, timeseries,
             graph, sqlfront)
 
-# The driver grades the first 50 dict entries (in insertion order), so
-# _GRADE_FIRST is the rotation manifest: each round it leads with the
-# queries that most need a fresh CORRECTNESS row (never-graded first,
-# then changed-since-their-last-green-row, then new operators).
-# Everything not listed follows in module order, so the full registry
-# is intact and every entry keeps its newest green row on record.
+# The driver grades the first 50 queries() entries, in insertion order.
+# _GRADE_FIRST is that window and holds at most 50 names: first the
+# queries never graded, then those changed since their last green
+# correctness row, then new operators. All other queries follow in
+# module order, so the full registry is intact.
 _GRADE_FIRST = (
-    # ---------------- ROUND-13 WINDOW (first 50 entries) ----------------
-    # Rotation per VERDICT_r12 task #9: the 4 sweep-only entries the
-    # round-12 rewrites displaced lead; then every query whose plan was
-    # restructured THIS round (the arrow_udf fold vectorization across
-    # the similarity/dedup/decon class, the markov driver solve, the
-    # batched kcore peel, the cdc_key_envelope parse barrier, the
-    # conformal count reuse — each oracle-green at sf0.001+sf0.01 after
-    # the change, OPTIMIZATION_r13.md); then the changed-since-green
-    # queue (the r8-vintage head of the 59 remaining sweep-touched
-    # entries, name order within the vintage). Names moved here are
-    # removed from the historical sections below (global-uniqueness
-    # guard). Round 12's 50 slots all retired green (CORRECTNESS_r12:
-    # 50/50).
-    # -- displaced sweep-only entries (4) --
     "ts_motif_discovery", "agg_approx_sketches",
     "dedup_sample_rate_estimate", "embedding_class_scatter",
-    # -- round-13 rewrites (23) --
     "similarity_threshold_pairs", "dedup_embedding_cosine",
     "dedup_semantic_semdedup", "train_decontaminate_semantic",
     "events_markov_stationary", "graph_kcore_decomposition",
     "cdc_key_envelope", "stats_conformal_interval",
     "similarity_pair_distance_histogram", "similarity_jl_projection_audit",
-    "knn_mmr_rerank", "knn_sq8_search",
-    "ann_range_search", "ann_recall_eval",
-    "knn_bruteforce_cosine", "knn_ivf_centroid",
-    "knn_lsh_hyperplane", "knn_pq_quantize",
-    "mine_hard_negatives", "kmeans_silhouette_eval",
-    "kmeans_cluster_agreement", "knn_ivf_balance_report",
-    "similarity_mips_norm_augment",
-    # -- changed-since-green fill (23, r8 vintage) --
+    "knn_mmr_rerank", "knn_sq8_search", "ann_range_search",
+    "ann_recall_eval", "knn_bruteforce_cosine", "knn_ivf_centroid",
+    "knn_lsh_hyperplane", "knn_pq_quantize", "mine_hard_negatives",
+    "kmeans_silhouette_eval", "kmeans_cluster_agreement",
+    "knn_ivf_balance_report", "similarity_mips_norm_augment",
     "events_retention_cohorts", "events_session_stats",
     "events_time_to_convert", "graph_link_prediction",
-    "layout_clustering_depth", "layout_range_bounds",
-    "orders_ship_latency", "sketch_accuracy_eval",
-    "stats_brier_decomposition", "stats_chi_square_independence",
-    "stats_eb_shrinkage", "stats_gini_split_search",
-    "stats_isotonic_calibration", "stats_levene_variance",
-    "stats_twoway_fixed_effects", "streaming_retention_curve_replay",
-    "train_corpus_release", "train_cross_source_overlap",
-    "train_dataset_card", "train_length_buckets",
-    "ts_dow_seasonality", "ts_exponential_smoothing",
-    "ts_kendall_tau",
-    # ---------------- end ROUND-13 WINDOW ----------------
-    # ---------------- ROUND-12 WINDOW (first 50 entries) ----------------
-    # Rotation per VERDICT_r11 tasks #1/#5. This round's substantive
-    # change is the persist sweep (task #1): 106 flat
-    # localCheckpoint(eager=True) sites converted to .persist() —
-    # plus graph_hits_scores' two in-loop eager=last sites (a LATENT
-    # LAZY checkpoint pair the round-11 literal-False AST scan
-    # missed) — leaving exactly 17 load-bearing checkpoint sites
-    # (iterative lineage truncation + CDC read-overwrite isolation),
-    # pinned by tests/test_checkpoint_guard.py's allowlist. The
-    # changed-since-green set is computed TRANSITIVELY this round
-    # (call-graph closure over package helpers — _twophase's two
-    # converted sites propagate to every exact_quantiles /
-    # with_global_order caller): 102 registry queries whose latest
-    # driver row predates the code they now run. Window = the
-    # 12 BENCH_r11 regression casualties first (they changed again
-    # this round and lead the verdict's triage list), then the
-    # transitive changed set oldest driver-row vintage first
-    # (fill of 38: 8 r4, 2 r5, 6 r6, 16 r7, 6 r8 — five of the
-    # casualties carry r6/r7/r9 vintages themselves); the
-    # remaining 59 (27 r8, 17 r9, 15 r10) queue for round 13.
-    # -- BENCH_r11 casualties (12), persist-sweep-fixed --
-    "ts_binseg_changepoints", "layout_hilbert_events",
-    "graph_hits_scores",
-    "events_incident_windows", "multimodal_phash_near_pairs",
-    "ab_test_cuped", "text_heaps_law_fit", "layout_bloom_design",
-    "text_textrank_keywords", "multimodal_tga_decode",
-    "dedup_incremental_new_batch",
-    # -- round-12 OPTIMIZATION-round rewrites (4): queries whose plan
-    # was restructured THIS round beyond the inherited sweep (loop
-    # persist conversion / window-min / grouped quantile stack /
-    # shared-frame persist — OPTIMIZATION_r12.md), each oracle-green
-    # at sf0.001 after the change; they join the 6 rewrites already in
-    # the window (textrank, pagerank, khop, mmr, kcore, bpe x2, rfm,
-    # kll below) so every round-12-rewritten query gets a fresh row --
-    "graph_label_propagation", "kmeans_lloyd_iterations",
-    "q2_min_cost_supplier", # -- transitive changed-since-green fill (34), oldest vintage
-    # first (vintages from the CORRECTNESS_r01..r11 green rows; the 4
-    # newest-vintage sweep-only entries — ts_motif_discovery,
-    # agg_approx_sketches, dedup_sample_rate_estimate,
-    # embedding_class_scatter — were displaced by the rewrites above
-    # and roll to the round-13 head) --
-    "basket_part_pairs", "graph_khop_reachability",
-    "graph_pagerank_trade", "graph_triangle_count", "search_rrf_fusion", "train_bpe_merge_learn", "basket_rules_lift",
-    "train_bpe_tokenize_apply", "events_revenue_concentration",
-    "parts_abc_classification", "text_vocab_coverage_curve",
-    "train_curriculum_order", "train_interleave_schedule",
-    "train_split_leakage", "ab_test_srm_check",
-    "graph_local_clustering",
-    "multimodal_audio_fingerprint", "parts_pareto_skyline",
-    "quality_fd_discovery", "skew_salting_plan", "stats_auc_roc",
-    "stats_fdr_bh_weekend",
-    "stats_hill_tail_index", "stats_kfold_cv_slope", "stats_ks_two_sample",
-    "text_rake_keywords", "train_epoch_shuffle_audit",
-    "customer_rfm_segments",
-    "embedding_quality_gate", "events_kll_quantile_rollup",
-    # ---------------- end ROUND-12 WINDOW ----------------
-    # ---------------- ROUND-11 WINDOW (first 50 entries) ----------------
-    # Rotation per VERDICT_r10 task #2, executed exactly as queued in
-    # the round-11 notes below: with the never-graded backlog at ZERO
-    # (round 10 drained it) and no round-11 registry additions (the
-    # queue leaves zero slack; the playbook caps additions at the
-    # slack), the window is 3 changed-since-green + 47 stale-green
-    # refreshes, oldest driver row first.
-    # -- changed-since-green (3): the zip_with generator rewrites
-    # that landed late in round 10 (the quadratic
-    # InferFiltersFromGenerate clone fix; oracle-green at both SFs
-    # after the change, but their latest driver rows predate it) --
-    "text_pmi_bigrams", "text_bigram_logprob", "text_shingle_novelty",
-    # -- r2-vintage stale greens (38): last driver rows date to round
-    # 2, 9 rounds ago; every one hash-green in the judge's full
-    # 398/398 sf0.01 round-10 run, so this is a refresh, not a risk.
-    # NOTE: all of these also carry the round-11 eager-checkpoint
-    # sweep where their modules had lazy sites (dedup, similarity,
-    # text, training, relational, multimodal, timeseries), so the
-    # refresh doubles as the task-#6 changed-code re-grade for the
-    # r2 cohort. --
-    # (kmeans_lloyd_iterations and q2_min_cost_supplier moved to the
-    # round-12 window above — rewritten this round; listed once per
-    # the global-uniqueness guard)
-    "dedup_cluster_assign", "dedup_exact",
-    "dedup_fuzzy_levenshtein", "dedup_simhash",
-    "embedding_centroid_per_label",
-    "multimodal_frame_sample",
-    "multimodal_payload_meta", "q11_important_parts",
-    "q12_priority_lines", "q13_customer_distribution",
-    "q14_promo_effect", "q15_top_supplier", "q16_supplier_cnt",
-    "q17_small_quantity", "q20_excess_suppliers",
-    "q21_waiting_supplier", "q22_global_sales",
-    "q4_order_priority", "q7_volume_shipping", "q8_market_share",
-    "q9_product_profit", "sample_stratified_orders",
-    "text_bpe_token_count",
-    "text_fingerprint_md5", "text_repetition_signals",
-    "text_shingle_fingerprint", "text_tfidf_top_terms",
-    "text_top_tokens", "train_sequence_pack",
-    "unpivot_lineitem_metrics",
-    # -- r3-vintage stale greens (9, the oldest by registry order;
-    # the remaining 33 r3-vintage roll to round 12 behind the
-    # eager-sweep re-grades) --
-    "cdc_topic_routing", "q3_shipping_priority",
-    "q6_forecast_revenue", "q18_large_volume_customers",
-    "q19_disjunctive_predicates", "join_semi_urgent_customers",
-    "agg_rollup_order_status", "agg_cube_returnflag",
-    # ---------------- end ROUND-11 WINDOW ----------------
-    # ---- round-12 queue notes: EXECUTED as the ROUND-12 WINDOW
-    # above, with two deliberate upgrades over the plan written here
-    # last round: (1) the changed-since-green set was recomputed
-    # TRANSITIVELY (call-graph closure — the round-11 list used
-    # enclosing function bodies only, which missed e.g. every
-    # exact_quantiles caller when _twophase changed), and this
-    # round's persist sweep re-touches most of the same functions
-    # anyway; (2) the 12 BENCH_r11 regression casualties lead the
-    # window per VERDICT r11 task #1, since they changed again this
-    # round. Round 11's 50 slots all retired green
-    # (CORRECTNESS_r11: 50/50). ----
-    # ---- round-13 queue notes (priority rule: never-graded >
-    # changed-since-green > stale-green, oldest driver row first).
-    # Never-graded: none. Changed-since-green: the 59 remaining
-    # persist-sweep-touched entries (reproducible as: transitive
-    # call-graph closure of the round-12 sweep commit's changed
-    # functions over the registry, minus this round's window —
-    # 27 r8, 17 r9, 15 r10 at queue time). Then
-    # the stale-green tail: the 33 remaining r3-vintage entries,
-    # then r4. Round-13 additions stay within whatever slack
-    # remains after the changed-since-green head. ----
-    # ---------------- ROUND-10 WINDOW (historical) ----------------
-    # Rotation per VERDICT_r9 tasks #1/#2: the 24-entry never-graded
-    # backlog leads (the 12 final-session round-9 spillovers + the 11
-    # closing additions + stats_jarque_bera; all 24 judge-verified
-    # green at sf0.01 during round-9 judging). Two of them changed
-    # THIS round while still awaiting their first driver row, so no
-    # green row is invalidated: multimodal_audio_zcr carries the
-    # round-9 ADVICE fix (parity-conditional sign injection — the
-    # stats were identically zero and vacuous before), and
-    # train_decontaminate_bloom carries the VERDICT task-#5 plan
-    # rewrite (array-fold probes instead of the ×K crossJoin row
-    # expansion; oracle byte-identical). Then this round's additions
-    # (capped at the window slack, per task #2: 5 new operators, each
-    # oracle-green at sf0.001+sf0.01 with a Python reference test
-    # before registration). Then the 20 r1-vintage stale greens whose
-    # refresh was displaced in round 9 (last driver rows date to
-    # round 1). Round 9's 50 slots all retired green
-    # (CORRECTNESS_r09: 50/50).
-    # -- never-graded backlog (24) --
-    "text_llr_collocations", "layout_sort_order_advisor",
-    "stats_cochran_q", "stats_bartlett_variance",
-    "stats_dkw_ecdf_band", "ts_durbin_watson", "ts_variance_ratio",
-    "graph_modularity_nations", "graph_powerlaw_alpha",
-    "stats_capture_recapture", "quality_kanonymity_audit",
-    "stats_cochran_armitage_trend", "multimodal_audio_zcr",
-    "stats_odds_ratio_risk", "ts_crosscorr_leadlag",
-    "sql_range_interval_window",
-    "train_decontaminate_bloom", "multimodal_image_otsu",
-    "sql_named_window_text", "stats_cohens_kappa",
-    "ts_classical_decompose",
-    "stats_jarque_bera",
-    # -- changed-since-green (1): graph_label_propagation carried the
-    # VERDICT task-#7 root-cause fix here (oriented a.s < b.s
-    # through-part join + mirror); moved to the round-12 window above
-    # (rewritten again this round; listed once per the
-    # global-uniqueness guard) --
-    # -- round-10 additions (5): Wilson score intervals, aggregate
-    # FILTER clause as SQL text, Garlaschelli-Loffredo trade
-    # reciprocity, Hurst R/S exponent, histogram equalization on the
-    # real decode path --
-    "ab_test_wilson_ci", "sql_filtered_agg_text",
-    "graph_trade_reciprocity", "ts_hurst_rs_exponent",
-    "multimodal_image_equalize",
-    # -- r1-vintage stale greens (20; every one hash-green in the
-    # judge's full sf0.01 round-9 run, so this is a refresh, not a
-    # risk) --
-    "agg_collect_nations_per_region", "agg_distinct_per_flag",
-    "filter_nullsafe_priority_pairs", "hof_order_quantities",
-    "join_anti_customers_no_orders", "join_outer_nation_coverage",
-    "map_priority_profile", "q10_returned_items",
-    "q5_local_supplier_volume", "sample_deterministic_orders",
-    "scalar_date_order_seasonality", "scalar_math_discount_model",
-    "scalar_string_part_facets", "setop_except_nations",
-    "setop_intersect_nations", "setop_union_nations_with_presence",
-    "window_ntile_customer_value", "window_range_frame_spend",
-    "window_running_customer_spend", "window_topk_orders_per_segment",
-    # ---------------- end ROUND-10 WINDOW ----------------
-    # ---- round-11 queue notes (EXECUTED verbatim as the ROUND-11
-    # WINDOW above): with the never-graded backlog at
-    # ZERO (this window drains all 24 + grades the 5 additions the
-    # same round they landed), the rotation is pure stale-green
-    # refresh, oldest driver row first: the 38 r2-vintage entries
-    # (dedup_cluster_assign, dedup_embedding_cosine, dedup_exact,
-    # dedup_fuzzy_levenshtein, dedup_simhash,
-    # embedding_centroid_per_label, kmeans_lloyd_iterations,
-    # knn_bruteforce_cosine, knn_ivf_centroid, knn_lsh_hyperplane,
-    # knn_pq_quantize, multimodal_frame_sample,
-    # multimodal_payload_meta, q11-q17, q20-q22, q2, q4, q7-q9,
-    # sample_stratified_orders, similarity_threshold_pairs,
-    # text_bpe_token_count, text_fingerprint_md5,
-    # text_repetition_signals, text_shingle_fingerprint,
-    # text_tfidf_top_terms, text_top_tokens, train_sequence_pack,
-    # unpivot_lineitem_metrics) plus — FIRST, per the priority rule
-    # (changed-since-green outranks stale-green) — the 3 queries
-    # whose generators were rewritten to the zip_with form late in
-    # round 10 (text_pmi_bigrams r4-green, text_bigram_logprob
-    # r5-green, text_shingle_novelty r5-green; the quadratic
-    # InferFiltersFromGenerate clone fix — same bytes, oracle-green
-    # at both SFs after the change; text_llr_collocations got the
-    # same rewrite but is already in THIS round's window), then the
-    # 9 oldest r3-vintage fill the 50 slots; any round-11 additions
-    # must stay within the slack after those or wait. ----
-    # ---------------- ROUND-9 WINDOW (historical) ----------------
-    # Rotation per VERDICT_r8 task #1: the 10-entry never-graded
-    # backlog leads (3 final-commit + 7 late-r8 additions; all 10
-    # judge-verified green at sf0.01 during round-8 judging, and the
-    # two that carried round-8 ADVICE defects — the G-test df=16
-    # critical value and the Qini salted tie-break — were fixed THIS
-    # round while still awaiting their first driver row, so no green
-    # row is invalidated). Then the changed-since-green set: the
-    # PCA explained-variance rewrite (now hash-gradable via exact
-    # trace/Frobenius companions — VERDICT_r8 task #2), the two MoR
-    # queries whose cdc/apply.py resolver gained dv-mask + versioned
-    # compaction (ADVICE fixes), and the 15 money-rounding rewrites
-    # (VERDICT_r8 task #5: exact integer sub-units summed to the
-    # final grain, divided once). Then the round-9 additions, then
-    # the oldest stale greens (r1 vintage, last graded 8 rounds ago).
-    # Round 8's 50 slots all retired green (CORRECTNESS_r08: 50/50).
-    # -- never-graded backlog (10) --
-    "quality_data_contract_check", "stats_pinball_quantile_eval",
-    "graph_adamic_adar_topk", "stats_g_test_independence",
-    "ab_test_uplift_qini", "sample_weighted_ares",
-    "sql_window_running_share",
-    "stats_anova_oneway", "stats_kruskal_wallis",
-    # -- changed-since-green (18) --
-    "embedding_pca_explained_variance",
-    "cdc_merge_on_read_state", "cdc_mor_time_travel",
-    "q1_pricing_summary", "join_range_price_band",
-    "agg_stats_acctbal", "events_anomaly_zscore",
-    "discount_quantity_elasticity", "quality_reconcile_order_totals",
-    "quality_schema_drift", "feature_winsorized_scale",
-    "feature_target_encode_loo", "stats_bootstrap_subsample_ci",
-    "stats_permutation_weekend", "ts_gapfill_interpolate",
-    "ts_autocorr_daily", "ts_ohlc_bars", "ts_time_weighted_avg",
-    # -- round-9 additions (5): SQL-text subquery forms (NOT EXISTS
-    # anti-join, correlated scalar subquery, IN semi-join — each
-    # decorrelation plan-asserted in tests/test_sqlfront.py), the
-    # MoR commit-over-commit schema-drift audit, and the compaction
-    # executor's zone-map pruning proof --
-    "sql_not_exists_no_urgent", "sql_scalar_subquery_small_qty",
-    "sql_in_semijoin_returned", "cdc_mor_schema_drift",
-    "layout_compaction_zonemap_audit",
-    # -- never-graded late-round-9 additions (17). These displaced the
-    # 17 r1-vintage stale-green refreshes originally slotted here:
-    # never-graded rows outrank stale-green refreshes (a stale green
-    # is still a green row on record; a never-graded query has none),
-    # and 13 more operators landed after the first rotation. All 17
-    # are oracle-green at sf0.001+sf0.01 with reference tests. The
-    # stale-green refresh (r1 vintage: agg_collect_nations_per_region,
-    # setops, scalars, window_ntile..., q5/q10, etc.) moves to round
-    # 10's rotation together with this session's 9 remaining
-    # never-graded additions. --
-    "streaming_uplift_monitor_replay", "sql_pivot_text",
-    "ts_mann_kendall_trend", "train_dsir_importance",
-    "stats_cohens_d_effect", "stats_theils_u",
-    "stats_wilcoxon_signed_rank", "ts_brown_double_smoothing",
-    "ts_page_hinkley_drift", "sql_unpivot_text", "quality_column_entropy_profile",
-    "streaming_session_window_replay",
-    "sql_group_by_all_text", "sql_values_inline_dim",
-    "stats_friedman_test", # ---------------- end ROUND-9 WINDOW ----------------
-    # ---- round-10 queue notes: after the final-session re-rotation
-    # (the 13 mid-round additions + 4 final-session additions took
-    # the window's last 17 slots), round 10's never-graded backlog is
-    # the 12 final-session spillovers — each oracle-green at
-    # sf0.001+sf0.01 with a Python reference test before
-    # registration: text_llr_collocations (Dunning G^2 entropy form),
-    # layout_sort_order_advisor (zone-map skip fractions per
-    # candidate sort key), stats_cochran_q (exact-integer incidence
-    # blocks), stats_bartlett_variance (corrected equal-variance
-    # chi-square), stats_dkw_ecdf_band (simultaneous ECDF band),
-    # ts_durbin_watson (trend-residual autocorrelation),
-    # ts_variance_ratio (Lo-MacKinlay VR(5)),
-    # graph_modularity_nations (per-community Newman contributions),
-    # graph_powerlaw_alpha (CSN degree-tail MLE),
-    # stats_capture_recapture (Chapman estimator + coverage
-    # self-check), quality_kanonymity_audit (QI equivalence-class
-    # privacy gate), stats_cochran_armitage_trend (ordinal trend in
-    # proportions) — plus the 11 closing additions
-    # (multimodal_audio_zcr, stats_odds_ratio_risk,
-    # ts_crosscorr_leadlag, similarity_pair_distance_histogram,
-    # sql_range_interval_window, train_decontaminate_bloom,
-    # multimodal_image_otsu, sql_named_window_text,
-    # stats_cohens_kappa, kmeans_cluster_agreement,
-    # ts_classical_decompose), all oracle-green at both SFs and
-    # covered by the closing 392/392 sf0.01 gate. After those,
-    # rotate the 20 r1-vintage stale
-    # greens displaced this round (agg_collect_nations_per_region,
-    # agg_distinct_per_flag, filter_nullsafe_priority_pairs,
-    # hof_order_quantities, join_anti_customers_no_orders,
-    # join_outer_nation_coverage, map_priority_profile,
-    # q10_returned_items, q5_local_supplier_volume,
-    # sample_deterministic_orders, scalar_date_order_seasonality,
-    # scalar_math_discount_model, scalar_string_part_facets,
-    # setop_except_nations, setop_intersect_nations,
-    # setop_union_nations_with_presence, window_ntile_customer_value,
-    # window_range_frame_spend, window_running_customer_spend,
-    # window_topk_orders_per_segment), then r2-vintage stale greens
-    # to fill the 50-slot window.
-    # ---------------- ROUND-8 WINDOW (historical) ----------------
-    # Rotation per VERDICT_r7 task #1: the 24 never-graded entries lead
-    # (8 round-7 spillover + the 16 round-7 additions), then the
-    # changed-since-green set (the round-7 percentile rewrites whose
-    # shared helper _twophase.exact_quantiles gained the ADVICE NULL
-    # filter this round — a no-op on the NULL-free fixtures, but the
-    # code changed so their green rows rotate back in), then the
-    # round-8 additions. Round 7's 50 slots all retired green
-    # (CORRECTNESS_r07: 49 hash + 1 declared rows-only).
-    # -- never-graded: round-7 spillover (8) --
-    "streaming_trending_topk_replay",
-    # ab_test_clustered_se carries this round's ADVICE fix: the
-    # event-grain second moment now accumulates as decimal(38,0)
-    # (sum of squared cents wraps BIGINT past ~1e9 events; DuckDB
-    # promotes SUM(BIGINT) to HUGEINT — engines now agree at scale).
-    "ab_test_clustered_se",
-    "text_term_burstiness",
-    "quality_key_discovery",
-    # -- never-graded: round-7 additions (16) --
-    "quality_fk_orphans", "orders_cohort_ltv", "stats_mcnemar_paired", "ts_spearman_daily",
-    "ts_ljungbox_whiteness", "ts_runs_test",
-    "text_yule_k",
-    # -- changed-since-green (15): the exact_quantiles callers with
-    # prior driver rows (the helper gained the isNotNull filter) plus
-    # the two round-7 ADVICE-fix greens --
-    # -- round-8 additions (11 slots) --
-    # Pure-SQL front end (VERDICT_r7 #4): each enters through
-    # spark.sql text shared verbatim with the DuckDB oracle —
-    # TPC-H Q5 as one SQL statement (EUROPE/1995 so it is not a
-    # result-duplicate of the DataFrame twin), GROUPING SETS with
-    # explicit GROUPING() flags, temp-view DDL lifecycle
-    # (view-on-view catalog resolution), and INTERSECT/EXCEPT/UNION
-    # cohort decomposition.
-    "sql_tpch_q5_text", "sql_grouping_sets_revenue",
-    "sql_view_lifecycle_ctas", "sql_set_ops_customer_activity",
-    # End-to-end corpus release through the §3c engine lifecycle
-    # (VERDICT_r7 #5+#8): dedup keep-best -> quality filter ->
-    # decontaminate -> shard, the first two stages resolved BY NAME
-    # from engine.named_transforms(); per-shard manifest output.
-    # Merge-on-read CDC apply (VERDICT_r7 #8 delete-vector semantics):
-    # O(batch) delta+delete-vector commits resolved by
-    # cdc.apply.resolve_current_state with last/first-writer-wins
-    # conflict policies; batch-graded per-bucket live manifest, the
-    # file lifecycle pinned hermetically in tests/test_cdc_apply.py.
-    # Streaming retention: first-touch state (streaming.
-    # first_touch_cohorts, update-mode MIN-day-per-user) replayed as
-    # the maturity-corrected blended retention curve; drained-stream
-    # parity pinned in tests/test_streaming.py.
-    # BM25 ranked retrieval (Lucene idf form) over the inverted-index
-    # shape: postings for the query terms only, pre-rounded scores,
-    # TakeOrdered top-k; Python tf/df/avgdl reference in pytest.
-    "search_bm25_topk",
-    # Common-neighbor/Jaccard link prediction on the part
-    # co-occurrence graph — full-adjacency apex wedge enumeration
-    # (orientation would undercount CN; caught by the pytest
-    # reference), pair-keyed aggs, anti-join of existing edges.
-    # Exact CART decision-stump split search: value-vocabulary-grain
-    # cumulative label counts (AUC-style triangular join), weighted
-    # Gini per threshold, top-5 splits; exhaustive Python reference.
-    # VERSION AS OF reads on the MoR table: state at every commit
-    # seq 0-3 through the same resolver (delete vectors make history
-    # reconstruction free); completes the merge-on-read family.
-    # ---------------- end ROUND-8 WINDOW ----------------
-    # Round-7 window (VERDICT_r6 task #2: drain the 58-entry
-    # never-graded backlog). Round 6's 50-slot window came back
-    # 50/50 green (CORRECTNESS_r06), so every round-6 slot retires to
-    # its green row and the 58 operators registered after that window
-    # filled take the round-7 slots, oldest session first — the first
-    # 50 below fit the window; the last 8 (marked) spill to round 8.
-    # Priority rule unchanged: never-graded outranks
-    # changed-since-grading outranks stale-green.
-    # Round-7 edits to queue members (all re-verified oracle-green at
-    # sf0.001 AND sf0.01 under the new 8GB-capped harness before this
-    # rotation): graph_kcore_decomposition's oracle peel CTEs are now
-    # AS MATERIALIZED (the VERDICT_r6 #1 memory bomb — same rows,
-    # 0.4 s instead of ~88 GB RSS), and every other generated oracle
-    # is hardened the same way via operators/_oracleutil.py.
-    "multimodal_image_patches",
-    "ab_test_sequential_sprt",
-    "multimodal_video_shots", "cdc_schema_evolution_audit",
-    # late-round-6 batch 2 (same contract: oracle + pytest pins +
-    # plan-audit pass before registration): WOE/IV feature scoring,
-    # leave-one-out target encoding, two-phase strict-cummax Pareto
-    # skyline, hashing-trick featurizer, partial-Gram PCA covariance,
-    # vocabulary-grain Jaro-Winkler, positional-index phrase search.
-    "feature_woe_iv", "feature_hashing_trick",
-    "embedding_pca_covariance", "dedup_jaro_winkler",
-    "search_phrase_match",
-    # late-round-6 batch 3: stream-static dim-enrich replay twin,
-    # termwise-DFT audio spectral signature on the real WAV decode
-    # path, and the driver-eigen PCA explained-variance report
-    # (rows-only; its covariance input is the hash-graded twin).
-    "streaming_static_enrich_replay", "multimodal_audio_spectrum",
-    # Markov-chain attribution with removal effects: distributed
-    # journey/edge aggregation + driver fixed-point on the channel-
-    # vocabulary matrix, oracle = the same 200 iterations as a
-    # recursive CTE; pinned against an exact linear solve in pytest.
-    "events_attribution_markov",
-    # late-round-6 batch 4: m-out-of-n subsample bootstrap CI
-    # (portable hash replicas), matrix-profile motif discovery at
-    # day grain, SSIM probe retrieval on the real PPM decode path.
-    "multimodal_ssim_probe_rank",
-    # batch 5: Spark 4 WITH RECURSIVE front-end graded verbatim
-    # against DuckDB's recursion; assumption-free permutation test on
-    # deterministic md5 label permutations.
-    "sql_recursive_reachability", # exact isotonic calibration via PAVA's minimax identity — pure
-    # bin-grain aggregation algebra after one bucket-assign pass.
-    # k-core decomposition: fixed-round degree peeling on the
-    # sparsified trade graph; oracle unrolls the same rounds, pytest
-    # peels to true convergence and checks the round budget covers it.
-    # PSI feature-drift gate: reference-bin population stability
-    # index, one data-grain bin-count shuffle, 20-row downstream.
-    "feature_psi_drift",
-    # split conformal prediction intervals: md5 train/calib/test
-    # split, two-phase exact order statistic, broadcast coverage.
-    # 2x2 diff-in-diff on integer purchase counts — exact-integer
-    # moments, one user-grain shuffle, A&S p-value (A/A probe).
-    "ab_test_diff_in_diff",
-    # System-R join-cardinality audit: est |R||S|/max(ndv) vs the
-    # exact join size from key-grain count products (no raw join).
-    "stats_join_size_estimate",
-    # Murphy Brier decomposition: train-half bin forecasts scored on
-    # the held-out half; BS = REL - RES + UNC pinned exactly.
-    # Shazam-style constellation fingerprint retrieval on the real
-    # WAV decode path — hash-keyed landmark join, byte-level replay.
-    # Neyman-optimal stratified allocation plan from exact
-    # integer-cents moments; Var_neyman <= Var_prop pinned.
-    "sample_neyman_allocation",
-    # k-fold CV slope via the leave-fold-out sum identity — k models
-    # from one moment frame, held-out RMSE per fold.
-    # Watts-Strogatz local clustering top-k on the oriented-wedge
-    # O(m^1.5) pipeline; checkpointed triangle list, 3-row explode.
-    # hot-key salting plan table: fan-out = ceil(n/budget), skew
-    # factor before/after — feeds skew.salted_join's n_salts.
-    # XLM-R temperature-scaled mixture: q = p^a / sum p^a sweep over
-    # token shares; one lang-grain agg, bounded grid downstream.
-    "train_mixture_temperature",
-    # bloom-filter design audit: measured FPR on guaranteed
-    # non-members vs (1-(1-1/m)^kn)^k per hash count k.
-    # approximate-FD profiling (Kivinen-Mannila g3) over the
-    # denormalized join view; exact holds/violations verdicts.
-    # RAKE keyphrases: stopword-island segmentation, deg/freq word
-    # scores, per-doc windows only, TakeOrdered top-k.
-    # two-round binary-segmentation changepoints on day-grain prefix
-    # frames; exhaustive O(n^2) Python reference pinned.
-    # JL Rademacher projection distortion audit — narrow per-row
-    # 64->16 map, probe x sample pair ratios, md5-parity matrix.
-    # ROC AUC via Mann-Whitney U with exact tie halves — no scored
-    # pairs materialize; score-vocabulary-grain cumulative counts.
-    # epoch-reshuffle decorrelation audit: exact Spearman over
-    # two-phase global ranks per md5 epoch order.
-    # equi-width histogram selectivity audit — the scan-side CBO
-    # statistic, interpolated estimate vs exact count + q-error.
-    "stats_selectivity_estimate",
-    # sample-ratio-mismatch guardrail: chi-square GOF on the hash
-    # split at the df=1 95% critical value.
-    # Hill Pareto tail index across a k-sweep — TakeOrdered top-k
-    # only, bounded-frame algebra, pre-rounded log terms.
-    # keyframe selection: integer gradient-energy sharpness argmax
-    # per clip on the real PPM decode path; byte-replayed oracle.
-    "multimodal_video_keyframe",
-    # Angrist-Imbens IV/Wald LATE for the encouragement design —
-    # exact 2-cell moments, ITT + first stage + take-ups surfaced.
-    "ab_test_iv_wald",
-    # time-partition granularity planner: day/week/month partition
-    # size distributions vs the writer row budget.
-    "layout_partition_granularity_plan",
-    # ---- round-7 window ends HERE (50 entries). The 8 below are the
-    # never-graded spillover to round 8 (they entered the registry
-    # last); each is oracle-green at sf0.001+sf0.01 locally, and the
-    # round-7 ADVICE fixes to events_markov_stationary and
-    # ab_test_clustered_se land while both still await their first
-    # driver row, so no green row is invalidated.
-    # trending top-k per tumbling window — the stateful-counts +
-    # sink-rank deployment; stream/batch parity pinned.
-    # Deng-et-al delta-method cluster-robust SE for the per-event
-    # ratio metric randomized by user; design effect vs naive SE.
-    # empirical-Bayes Beta-Binomial CTR shrinkage with MoM prior;
-    # volume-bucket calibration table, monotone data weight.
-    # Church-Gale term burstiness: cf/df burst size + VMR dispersion
-    # class at vocabulary grain, exact integer moments.
-    # two-way fixed-effects within estimator on the bounded
-    # (type, day) panel; correctly-degreed SE, within-R2.
-    # stationary distribution of the journey Markov chain — 20
-    # unrolled pi'=piP steps at |types|^2 grain, eigen-pinned.
-    # dup-rate sizing study: row-sample (biased) vs content-bucket
-    # sample (group-coherent) estimates vs the exact corpus rate.
-    # candidate-key discovery: exact distinct-vs-rows per column
-    # set, is-key verdicts, null-sentinel semantics.
-    # ---- round-9 queue notes (for the next rotation): the round-8
-    # window drains the entire backlog — its 50 slots are exactly the
-    # 24 never-graded + 15 changed-since-green + the first 11 round-8
-    # additions. THREE late-round-8 additions spill to round 9 as its
-    # never-graded backlog (each oracle-green at sf0.001+sf0.01 with
-    # Python reference tests): quality_data_contract_check,
-    # stats_pinball_quantile_eval, graph_adamic_adar_topk,
-    # stats_g_test_independence, ab_test_uplift_qini,
-    # sample_weighted_ares (Efraimidis-Spirakis one-pass weighted
-    # sampling on deterministic md5 uniforms), and
-    # text_textrank_keywords (damped PageRank on the word
-    # co-occurrence graph), sql_window_running_share (three window
-    # shapes in one SQL statement), stats_anova_oneway (exact-moment
-    # F-test), and stats_kruskal_wallis (exact midranks through the
-    # two-phase cumulative + tie correction). After those, rotate
-    # stale-green rows oldest-first (their last driver rows date to
-    # rounds 1-4).
+    "layout_clustering_depth", "layout_range_bounds", "orders_ship_latency",
+    "sketch_accuracy_eval", "stats_brier_decomposition",
+    "stats_chi_square_independence", "stats_eb_shrinkage",
+    "stats_gini_split_search", "stats_isotonic_calibration",
+    "stats_levene_variance", "stats_twoway_fixed_effects",
+    "streaming_retention_curve_replay", "train_corpus_release",
+    "train_cross_source_overlap", "train_dataset_card",
+    "train_length_buckets", "ts_dow_seasonality",
+    "ts_exponential_smoothing", "ts_kendall_tau",
 )
 
 

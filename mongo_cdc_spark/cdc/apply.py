@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from mongo_cdc_spark.io import hadoop_fs
+
 _UPSERT_OPS = ("insert", "update", "replace")
 _SNAPSHOT_SCHEMA = ("doc_key string, doc string, updated_at timestamp, "
                     "bucket int")
@@ -78,10 +80,7 @@ def apply_batch_to_snapshot(spark: SparkSession, snapshot_path: str,
         # drop every pre-existing document in the touched buckets. A
         # real read error must fail the batch so the streaming
         # checkpoint retries it.
-        jvm = spark.sparkContext._jvm
-        probe = jvm.org.apache.hadoop.fs.Path(snapshot_path)
-        fs = probe.getFileSystem(
-            spark.sparkContext._jsc.hadoopConfiguration())
+        fs, probe = hadoop_fs(spark, snapshot_path)
         merged = (latest.filter(F.col("op").isin(*_UPSERT_OPS))
                   .select("doc_key", "doc", "updated_at", "bucket"))
         if fs.exists(probe):
@@ -108,8 +107,7 @@ def apply_batch_to_snapshot(spark: SparkSession, snapshot_path: str,
         nonempty = set(obs.get["nonempty"])
         for b in touched:
             if b not in nonempty:
-                p = jvm.org.apache.hadoop.fs.Path(
-                    f"{snapshot_path}/bucket={b}")
+                _, p = hadoop_fs(spark, f"{snapshot_path}/bucket={b}")
                 if fs.exists(p):
                     fs.delete(p, True)
     finally:
@@ -168,10 +166,7 @@ def compact_snapshot(spark: SparkSession, snapshot_path: str) -> dict:
     At 100 TB scale, run it per-bucket-range to bound memory (the
     localCheckpoint holds only the buckets being compacted).
     """
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(snapshot_path)
-    fs = root.getFileSystem(conf)
+    fs, root = hadoop_fs(spark, snapshot_path)
     if not fs.exists(root):
         return {"files_before": 0, "files_after": 0, "buckets": 0,
                 "skipped_buckets": []}
@@ -338,9 +333,7 @@ def _base_versions(spark: SparkSession, table_path: str) -> list:
     versioned-commit protocol; accepted as-is). base-N dirs count only
     once their _SUCCESS marker exists — a compaction that crashed
     mid-write leaves a marker-less dir readers must ignore."""
-    jvm = spark.sparkContext._jvm
-    root = jvm.org.apache.hadoop.fs.Path(table_path)
-    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, root = hadoop_fs(spark, table_path)
     if not fs.exists(root):
         return []
     out = []
@@ -349,10 +342,10 @@ def _base_versions(spark: SparkSession, table_path: str) -> list:
         m = _BASE_DIR_RE.match(name)
         if not m:
             continue
+        _, marker = hadoop_fs(spark, f"{table_path}/{name}/_SUCCESS")
         if m.group(1) is None:
             out.append((0, name))
-        elif fs.exists(jvm.org.apache.hadoop.fs.Path(
-                f"{table_path}/{name}/_SUCCESS")):
+        elif fs.exists(marker):
             out.append((int(m.group(1)), name))
     return sorted(out)
 
@@ -421,11 +414,8 @@ def compact_merge_on_read(spark: SparkSession, table_path: str,
     (state.repartition("bucket").write.mode("overwrite")
      .partitionBy("bucket").parquet(f"{table_path}/{next_name}"))
     # ---- committed; everything below is cleanup ----
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     for sub in ("delta", "dv", *(name for _, name in old_versions)):
-        p = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{sub}")
-        fs = p.getFileSystem(conf)
+        fs, p = hadoop_fs(spark, f"{table_path}/{sub}")
         if fs.exists(p):
             fs.delete(p, True)
     return {"rows": n, "base_dir": next_name}
@@ -436,9 +426,7 @@ def _read_or_empty(spark: SparkSession, path: str,
     """Read a parquet dir or return an empty typed frame if absent
     (same explicit existence probe as apply_batch_to_snapshot — read
     errors must raise, only absence means empty)."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, p = hadoop_fs(spark, path)
     if fs.exists(p):
         return spark.read.schema(schema).parquet(path)
     return spark.createDataFrame([], schema)

@@ -40,6 +40,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from mongo_cdc_spark.cdc.schema import CHANGE_EVENT_SCHEMA
 from mongo_cdc_spark.cdc.transform import parse_events
+from mongo_cdc_spark.io import hadoop_fs
 
 _UPSERT_OPS = ("insert", "update", "replace")
 _PRE_OPS = ("update", "replace", "delete")
@@ -90,9 +91,7 @@ def _applied_batch(spark: SparkSession, view_path: str) -> int:
     """Highest batch id already folded into the view (−1 if none).
     Existence is probed via the Hadoop FS (not except-squashing — a real
     read error must fail the batch so the checkpoint retries it)."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(view_path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, p = hadoop_fs(spark, view_path)
     if not fs.exists(p):
         return -1
     row = spark.read.parquet(view_path).agg(

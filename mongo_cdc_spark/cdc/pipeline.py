@@ -47,7 +47,14 @@ def read_change_stream_files(spark: SparkSession, path: str,
     dropped at the source — the reference's skip-on-error semantics
     (main.go:104-108) — so relaying this stream directly never emits
     empty records. Pass keep_corrupt=True to keep the rejects (with
-    the _corrupt_record column) for DLQ routing via relay_with_dlq."""
+    the _corrupt_record column) for DLQ routing via relay_with_dlq.
+
+    Text lines through parse_change_events relay the same records
+    (tests/test_cdc_pipeline.py pins it), except on two inputs:
+    - a line holding a top-level JSON array: this source delivers each
+      element as an event, parse_change_events rejects the line;
+    - a blank line: this source skips it, parse_change_events with
+      keep_corrupt=True emits an all-null reject row with no raw text."""
     raw = (spark.readStream
            .schema(CHANGE_EVENT_SCHEMA_PERMISSIVE)
            .option("mode", "PERMISSIVE")
@@ -89,22 +96,6 @@ def relay_foreach_batch(events: DataFrame,
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
     return writer.start()
-
-
-def run_relay(spark: SparkSession, cfg: Config | None = None,
-              source_path: str | None = None) -> StreamingQuery:
-    """Wire the full relay: Mongo (or file fixture) → transform → Kafka.
-
-    Equivalent of func main (main.go:26-163); blocking drain is the
-    caller's awaitTermination, graceful stop is query.stop() (Spark
-    flushes the in-flight epoch — the 15 s Flush at main.go:158)."""
-    cfg = cfg or Config()
-    if source_path is not None:
-        # skip-on-error filtering happens inside the source
-        events = read_change_stream_files(spark, source_path)
-    else:
-        events = read_change_stream_mongo(spark, cfg)
-    return relay_to_kafka(events, cfg)
 
 
 def relay_with_dlq(events: DataFrame,

@@ -53,6 +53,7 @@ from mongo_cdc_spark.cdc.pipeline import (
     read_change_stream_files,
     read_change_stream_kafka,
     read_change_stream_mongo,
+    relay_to_kafka,
 )
 from mongo_cdc_spark.cdc.transform import to_kafka_records
 from mongo_cdc_spark.config import Config
@@ -182,13 +183,7 @@ class Pipeline:
         s = self._sink_cfg
         kind = s["kind"]
         if kind == "kafka":
-            cfg: Config = s.get("config") or Config()
-            writer = (to_kafka_records(df).writeStream.format("kafka")
-                      .options(**cfg.kafka_writer_options()))
-            if cfg.checkpoint_location:
-                writer = writer.option("checkpointLocation",
-                                       cfg.checkpoint_location)
-            return writer.start()
+            return relay_to_kafka(df, s.get("config") or Config())
         if s.get("serialize"):
             df = to_kafka_records(df)
         if kind == "memory":

@@ -1,4 +1,4 @@
-"""Fixture table loading (TESTDATA.md tables) and view registration."""
+"""Fixture table loading (TESTDATA.md tables) and batch scan/sink surfaces."""
 
 from __future__ import annotations
 
@@ -36,10 +36,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def read_batch(spark: SparkSession, path: str, fmt: str = "parquet",
                schema=None, **options) -> DataFrame:
     """Batch scan surface (SURVEY.md §2.2 'Scans / sources'): parquet
@@ -67,7 +63,10 @@ def write_batch(df: DataFrame, path: str, fmt: str = "parquet",
     writer.save(path)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql() use."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+def hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for `path` under the session's Hadoop
+    conf. Callers probe existence with `fs.exists(p)` rather than
+    catching read errors, so a real IO failure still raises."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()), p

@@ -515,30 +515,20 @@ def cdc_schema_evolution_audit(spark: SparkSession,
     unannounced field rollout or a producer regression dropping
     fields. Runs the synthetic evolving stream through the REAL parse
     path (cdc.transform.parse_change_events, main.go:104-108's
-    skip-on-error decode), then extracts the fingerprint from the
-    parsed envelope's fullDocument with json_object_keys — so the
-    oracle (which derives the expected fingerprints from the
-    generative rule) cross-checks the whole decode + extraction
-    chain, not a reimplementation of it.
+    skip-on-error decode) and the live monitor's own aggregation
+    (cdc.transform.schema_fingerprints, a complete-mode streaming
+    query with O(schemas) state), so the oracle (which derives the
+    expected fingerprints from the generative rule) grades the whole
+    decode + extraction chain that ships. Drain parity is pinned in
+    tests/test_streaming.py.
 
     Scale: the parse is a narrow stage; the rollup shuffles
     (coll, fingerprint) keys — schema-grain (a handful of rows per
     collection at any stream size), map-side combined. The per-coll
-    window runs over that schema-grain frame. The LIVE monitor is
-    `cdc.transform.schema_fingerprints` — the identical aggregation
-    running as a complete-mode streaming query with O(schemas) state;
-    drain parity vs this twin is pinned in tests/test_streaming.py."""
-    parsed = parse_change_events(_evolving_change_events(spark, sf_dir))
-    fp = F.concat_ws(
-        ",", F.sort_array(F.json_object_keys("fullDocument")))
-    key = F.col("documentKey._id").cast("bigint")
-    per = (parsed
-           .select(F.col("ns.coll").alias("coll"),
-                   fp.alias("schema_fields"), key.alias("k"))
-           .groupBy("coll", "schema_fields")
-           .agg(F.count(F.lit(1)).alias("n_events"),
-                F.min("k").alias("first_key"),
-                F.max("k").alias("last_key")))
+    window runs over that schema-grain frame."""
+    from mongo_cdc_spark.cdc.transform import schema_fingerprints
+    per = schema_fingerprints(
+        parse_change_events(_evolving_change_events(spark, sf_dir)))
     w = Window.partitionBy("coll")
     return (per
             .select("coll", "schema_fields", "n_events",

@@ -4402,15 +4402,14 @@ def stats_kruskal_wallis(spark: SparkSession,
 """)
 def streaming_uplift_monitor_replay(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
-    """Batch replay twin of the live experiment monitor: the SAME
-    per-(tumbling day window, variant) counts
-    streaming.variant_window_counts maintains as update-mode state,
-    accumulated into the running treat-vs-control uplift curve a
-    dashboard serves — cumulative conversions-per-event and
-    spend-per-event deltas as of each closed day. THE readout an
-    experimenter watches while an A/B test accumulates (and the
-    time-axis companion to ab_test_uplift_qini's score-axis decile
-    curve). Stream/batch frame parity is pinned in
+    """Batch replay of the live experiment monitor: the per-(tumbling
+    day window, variant) counts of `streaming.variant_window_counts`
+    over the bounded events table, accumulated into the running
+    treat-vs-control uplift curve a dashboard serves — cumulative
+    conversions-per-event and spend-per-event deltas as of each closed
+    day. THE readout an experimenter watches while an A/B test
+    accumulates (and the time-axis companion to ab_test_uplift_qini's
+    score-axis decile curve). Stream/batch frame parity is pinned in
     tests/test_streaming.py by draining the real file-source stream.
 
     Determinism: spend in exact integer cents, counts integer, each
@@ -4419,19 +4418,10 @@ def streaming_uplift_monitor_replay(spark: SparkSession,
     (day, variant) shuffle is the only data-grain stage; the dense
     day x {0,1} grid, the 2-partition cumulative windows, and the
     pivot run at calendar grain."""
-    ev = load_table(spark, sf_dir, "events")
-    variant = F.when(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 1)
-        < "8", 0).otherwise(1)
-    daily = (ev.groupBy(F.date_trunc("day", "ts").alias("day"),
-                        variant.alias("t"))
-             .agg(F.count(F.lit(1)).alias("n_ev"),
-                  F.sum(F.when(F.col("event_type") == "purchase", 1)
-                        .otherwise(0)).alias("n_pur"),
-                  F.sum(F.when(F.col("event_type") == "purchase",
-                               F.round(F.col("value") * 100)
-                               .cast("bigint")).otherwise(0))
-                  .alias("cents"))
+    from mongo_cdc_spark.streaming.analytics import variant_window_counts
+    daily = (variant_window_counts(load_table(spark, sf_dir, "events"))
+             .select(F.col("w.start").alias("day"), "t",
+                     "n_ev", "n_pur", "cents")
              .persist())
     days = daily.select("day").distinct()
     variants = spark.range(2).select(F.col("id").cast("int").alias("t"))

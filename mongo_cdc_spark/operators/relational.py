@@ -1213,8 +1213,8 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY hour_start, event_type
 """)
 def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time window as a batch query (the streaming twin —
-    same groupBy(window(...)) — lives in streaming/windows.py)."""
+    """Tumbling event-time window as a batch query (the streaming
+    counterpart is streaming.tumbling_window_counts)."""
     ev = _t(spark, sf_dir, "events").filter(
         (F.col("ts") >= F.lit("2024-01-01").cast("timestamp"))
         & (F.col("ts") < F.lit("2024-01-03").cast("timestamp")))
@@ -1330,16 +1330,15 @@ def window_sliding_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s GROUP BY user_id, sid ORDER BY user_id, session_start
 """)
 def window_session_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based session windows via F.session_window (10 min gap),
-    batch-side twin of streaming.session_window_stats. The oracle
+    """Gap-based session windows (10 min gap) from
+    `streaming.session_window_stats` run in batch. The oracle
     reconstructs Spark's merge rule (new session when the gap is ≥ the
     gap duration; window end = last event + gap) with lag + cumsum."""
+    from mongo_cdc_spark.streaming.analytics import session_window_stats
     return (
-        _t(spark, sf_dir, "events")
-        .groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("user_id", F.col("w.start").alias("session_start"),
-                F.col("w.end").alias("session_end"), "n")
+        session_window_stats(_t(spark, sf_dir, "events"))
+        .select("user_id", "session_start", "session_end",
+                F.col("n_events").alias("n"))
         .orderBy("user_id", "session_start")
     )
 
@@ -1369,6 +1368,8 @@ def streaming_dedup_within_watermark_replay(spark: SparkSession,
     is min-event-time-wins (arrival order == event-time order in the
     replay), expressed as a row_number window — which gives the
     watermark-bounded streaming op an oracle-graded correctness row.
+    Stays its own code: batch dropDuplicatesWithinWatermark keeps an
+    arbitrary row per key, while this twin pins the min-ts one.
     """
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type")
@@ -2208,6 +2209,7 @@ def streaming_userstats_v2_replay(spark: SparkSession,
     Scale: single shuffle on user_id with map-side partial aggregation;
     COUNT(DISTINCT event_type) expands to a two-phase exact distinct —
     bounded by the tiny event-type domain. Survives 100 TB.
+    Stays its own code: the v2 stateful processor cannot run in batch.
     """
     return (
         _t(spark, sf_dir, "events")
@@ -2687,7 +2689,8 @@ def streaming_interval_join_replay(spark: SparkSession,
     scope per row is two fixed-width buckets, independent of history
     length — at 100 TB the shuffle key (user, epoch) is fine-grained
     and skew-resistant, mirroring how the streaming engine scopes its
-    join state by watermark horizon."""
+    join state by watermark horizon. Stays its own code: a bucketed
+    equi-join, not the streaming operator's theta join."""
     ev = _t(spark, sf_dir, "events")
     clicks = (ev.filter(F.col("event_type") == "click")
               .select("user_id", F.col("ts").alias("click_ts"),
@@ -3344,7 +3347,8 @@ def streaming_interval_left_join_replay(spark: SparkSession,
     purchase table onto its own matched candidates keyed on buy_id —
     null-extending exactly the purchases with zero candidates.
     Explicit NULLS FIRST on click_id pins the cross-engine ordering
-    of the null-extended rows."""
+    of the null-extended rows. Stays its own code: a bucketed
+    equi-join, not the streaming operator's theta join."""
     ev = _t(spark, sf_dir, "events")
     clicks = (ev.filter(F.col("event_type") == "click")
               .select("user_id", F.col("ts").alias("click_ts"),
@@ -5645,30 +5649,24 @@ _TREND_K = 3
 """)
 def streaming_trending_topk_replay(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
-    """Batch replay twin of the "trending now" panel: the SAME
-    per-(tumbling window, event_type) counts
-    `streaming.tumbling_window_counts` maintains, ranked to the
-    top-{_TREND_K} types per closed window — in the streaming
-    deployment the windowed counts are the stateful stage and this
-    ranking runs in foreachBatch on each window's bounded slice
-    (exactly how dashboards serve trending lists: state holds
-    counts, the sink ranks). Stream/batch frame parity is pinned in
-    tests/test_streaming.py by draining the real file-source stream
-    and applying the identical rank.
+    """Batch replay of the "trending now" panel: the per-(tumbling
+    window, event_type) counts of `streaming.tumbling_window_counts`
+    over the bounded events table, ranked to the top-{_TREND_K} types
+    per closed window. In the streaming deployment the windowed counts
+    are the stateful stage and this ranking runs in foreachBatch on
+    each window's bounded slice (state holds counts, the sink ranks).
+    Stream/batch frame parity is pinned in tests/test_streaming.py by
+    draining the real file-source stream and applying the same rank.
 
     Scale: ONE partial-aggregatable (window, type) count shuffle;
     the rank window partitions per window over <= |event types|
     rows — bounded at any stream length."""
-    ev = load_table(spark, sf_dir, "events")
-    wc = (ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-          .agg(F.count(F.lit(1)).alias("n"),
-               F.round(F.sum("value"), 4).alias("total_value")))
-    rw = W.partitionBy("w").orderBy(F.desc("n"), "event_type")
+    from mongo_cdc_spark.streaming.analytics import tumbling_window_counts
+    wc = tumbling_window_counts(load_table(spark, sf_dir, "events"))
+    rw = W.partitionBy("window_start").orderBy(F.desc("n"), "event_type")
     return (wc.withColumn("rank", F.row_number().over(rw))
             .filter(F.col("rank") <= _TREND_K)
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"),
-                    "event_type",
+            .select("window_start", "window_end", "event_type",
                     F.col("n").cast("bigint").alias("n"),
                     "total_value",
                     F.col("rank").cast("int").alias("rank"))
@@ -6068,7 +6066,7 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 """)
 def streaming_retention_curve_replay(spark: SparkSession,
                                      sf_dir: str) -> DataFrame:
-    """Batch replay twin of the streaming retention dashboard: the
+    """Batch replay of the streaming retention dashboard: the
     stateful stage is `streaming.first_touch_cohorts` (update-mode
     MIN-day-per-user state) plus the (user, day) activity dedup; the
     sink serves THIS — the maturity-corrected blended retention
@@ -6087,12 +6085,12 @@ def streaming_retention_curve_replay(spark: SparkSession,
     filter. Cohort sizes are calendar-grain; the offs x sizes
     eligibility join is (offsets x days) rows, and the final join is
     {_RETENTION_MAX_OFFSET + 1} x {_RETENTION_MAX_OFFSET + 1} rows."""
+    from mongo_cdc_spark.streaming.analytics import first_touch_cohorts
     ev = _t(spark, sf_dir, "events")
     ud = (ev.select("user_id", F.date_trunc("day", "ts").alias("day"))
           .distinct()
           .persist())
-    first = (ud.groupBy("user_id").agg(F.min("day").alias("cohort"))
-             .persist())
+    first = first_touch_cohorts(ev).persist()
     act = (ud.join(first, "user_id")
            .withColumn("o", F.datediff("day", "cohort"))
            .where(F.col("o") <= _RETENTION_MAX_OFFSET))

@@ -591,31 +591,17 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY event_type, ws
 """)
 def streaming_ohlc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch replay twin of `streaming.tumbling_ohlc_bars`: the SAME
-    window + min_by/max_by aggregation expressed over the bounded
-    events table (F.window in batch mode), giving the streaming
-    operator an oracle-graded correctness row. Stream/batch parity is
-    additionally pinned by tests/test_streaming.py, which drains the
-    streaming version over a file source and asserts frame equality
-    with this twin.
+    """Batch replay of `streaming.tumbling_ohlc_bars` over the bounded
+    events table (its watermark is a no-op in batch), giving the
+    streaming operator an oracle-graded correctness row. Stream/batch
+    parity is additionally pinned by tests/test_streaming.py, which
+    drains the streaming version over a file source.
 
     Scale posture matches ts_ohlc_bars: one partial-aggregatable
     shuffle, O(1) state per open bar in the streaming run."""
-    ev = load_table(spark, sf_dir, "events")
-    okey = (F.unix_timestamp("ts") * F.lit(10000000)
-            + F.col("event_id"))
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.round(F.min_by("value", okey), 6).alias("open"),
-             F.round(F.max("value"), 6).alias("high"),
-             F.round(F.min("value"), 6).alias("low"),
-             F.round(F.max_by("value", okey), 6).alias("close"),
-             F.count(F.lit(1)).alias("volume"))
-        .select(F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-                "event_type", "open", "high", "low", "close", "volume")
-        .orderBy("event_type", "window_start")
-    )
+    from mongo_cdc_spark.streaming.analytics import tumbling_ohlc_bars
+    return (tumbling_ohlc_bars(load_table(spark, sf_dir, "events"))
+            .orderBy("event_type", "window_start"))
 
 
 @query("events_rate_ci", sql="""

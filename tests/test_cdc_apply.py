@@ -183,6 +183,26 @@ def test_apply_delete_only_first_batch(spark, tmp_path: Path):
     assert _snapshot(spark, snap) == {"b": '{"v":1}'}
 
 
+def test_apply_fails_on_an_unreadable_snapshot(spark, tmp_path: Path):
+    """Only a missing snapshot means "first batch". A snapshot that
+    exists but cannot be read must fail the batch (so the streaming
+    checkpoint retries it), not be treated as empty and overwritten."""
+    import pytest
+
+    snap = tmp_path / "snap"
+    by_bucket = _preload(spark, str(snap), 8, 2)
+    bucket, keys = sorted(by_bucket.items())[0]
+    for f in (snap / f"bucket={bucket}").glob("*.parquet"):
+        f.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        apply_batch_to_snapshot(spark, str(snap), _events_df(spark, [
+            _ev(keys[0], op="update", doc='{"v":1}',
+                ts="2024-11-08T00:05:00Z", rt="u1"),
+        ]), n_buckets=2)
+    assert all(f.read_bytes() == b"not a parquet file"
+               for f in (snap / f"bucket={bucket}").glob("*.parquet"))
+
+
 def test_apply_replayed_batch_is_idempotent(spark, tmp_path: Path):
     """Applying the same batch twice (a checkpointed replay) leaves an
     identical snapshot."""

@@ -240,6 +240,65 @@ def test_file_source_skips_corrupt_by_default(spark, tmp_path: Path):
     assert all(r.topic for r in out)
 
 
+def test_file_source_and_text_parse_relay_the_same_records(
+        spark, tmp_path: Path):
+    """The relay has two parse paths: Spark's JSON file source
+    (read_change_stream_files) and text lines through
+    parse_change_events. On the same lines, with the skip-on-error
+    rejects of main.go:104-108 among them, both must deliver the same
+    (topic, key, value) multiset to the sink."""
+    def with_doc(doc, **kw):
+        ev = _event(**kw)
+        ev["fullDocument"] = doc            # a JSON object, not a string
+        return json.dumps(ev)
+
+    missing_ns = _event(key="5", rt="rt5")
+    del missing_ns["ns"]
+    missing_key = _event(key="6", rt="rt6")
+    del missing_key["documentKey"]
+    nested = with_doc(
+        {"i": 7, "neg": -2147483648, "l": 2147483648,
+         "ll": 9223372036854775807, "d": 2.5, "w": 3.0,
+         "inner": {"z": -0.0, "arr": [1, 4294967296, 1.5e300],
+                   "deep": {"e": 5e-324}}},
+        key="1", rt="rt1")
+    lines = [
+        nested,
+        nested,                              # duplicates stay duplicates
+        with_doc({"qty": 2, "s": "crème"}, db="café", coll="menu",
+                 op="update", key="2", rt="rt2"),
+        json.dumps(_event(key="3", rt="rt3",
+                          full='{"qty": 3, "big": 4294967296}')),
+        json.dumps(_event(op="delete", key="4", rt="rt4", full=None)),
+        "{corrupt",
+        "NOT JSON {{{",
+        json.dumps(missing_ns),
+        json.dumps(missing_key),
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "events.json").write_text("\n".join(lines) + "\n")
+
+    def relayed(events, name):
+        out = []
+        q = relay_foreach_batch(events, lambda b, i: out.extend(b.collect()),
+                                checkpoint=str(tmp_path / name))
+        q.processAllAvailable()
+        q.stop()
+        return sorted((r.topic, r.key, r.value) for r in out)
+
+    files = relayed(read_change_stream_files(spark, str(src)), "ck_files")
+    text = relayed(parse_change_events(spark.readStream.text(str(src))),
+                   "ck_text")
+    assert files == text
+    assert [t for t, _, _ in files] == [
+        "café.menu", "shop.orders", "shop.orders", "shop.orders",
+        "shop.orders"]
+    doc = json.loads(files[1][2])["fullDocument"]
+    assert doc["ll"] == {"$numberLong": "9223372036854775807"}
+    assert doc["inner"]["z"] == {"$numberDouble": "-0.0"}
+
+
 # One event per operation type: a non-ASCII db name, int32/int64 edges,
 # integral and fractional doubles, an overflowing double, -0.0, and a
 # delete without a post-image; plus a corrupt line the parse must skip.

@@ -10,6 +10,7 @@ import json
 from pathlib import Path
 
 import pandas as pd
+import pytest
 
 from mongo_cdc_spark.io import load_table
 from mongo_cdc_spark.streaming import (
@@ -538,22 +539,11 @@ def test_streaming_ohlc_matches_batch_replay_twin(spark, tmp_path):
     view_9 = got[(got.event_type == "view")
                  & (got.window_start.dt.hour == 9)].iloc[0]
     assert view_9.open == 100.0 and view_9.close == 90.0
-    # parity with the batch twin formulation on the same frame:
-    # recompute via the batch groupBy over the drained source rows
-    from pyspark.sql import functions as F
+    # parity with the batch run of the same operator (what the graded
+    # twin streaming_ohlc_replay executes) over the drained source rows
     batch = (spark.read.schema(stream.schema).json(str(src))
              .filter("event_id != 99"))
-    okey = F.unix_timestamp("ts") * F.lit(10000000) + F.col("event_id")
-    twin = (batch.groupBy(F.window("ts", "1 hour").alias("w"),
-                          "event_type")
-            .agg(F.round(F.min_by("value", okey), 6).alias("open"),
-                 F.round(F.max("value"), 6).alias("high"),
-                 F.round(F.min("value"), 6).alias("low"),
-                 F.round(F.max_by("value", okey), 6).alias("close"),
-                 F.count(F.lit(1)).alias("volume"))
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"), "event_type",
-                    "open", "high", "low", "close", "volume")
+    twin = (tumbling_ohlc_bars(batch)
             .toPandas()
             .sort_values(["event_type", "window_start"])
             .reset_index(drop=True))
@@ -866,3 +856,42 @@ def test_streaming_session_window_matches_batch_replay_twin(
     assert list(u1.n_events) == [2, 1]
     assert ((u1.session_end - u1.session_start).dt.total_seconds()
             >= 600).all()
+
+
+_REWIRED_TWINS = [
+    ("timeseries", "streaming_ohlc_replay",
+     "mongo_cdc_spark.streaming.analytics", "tumbling_ohlc_bars"),
+    ("relational", "streaming_trending_topk_replay",
+     "mongo_cdc_spark.streaming.analytics", "tumbling_window_counts"),
+    ("quality", "streaming_uplift_monitor_replay",
+     "mongo_cdc_spark.streaming.analytics", "variant_window_counts"),
+    ("relational", "streaming_retention_curve_replay",
+     "mongo_cdc_spark.streaming.analytics", "first_touch_cohorts"),
+    ("relational", "window_session_events",
+     "mongo_cdc_spark.streaming.analytics", "session_window_stats"),
+    ("cdc_batch", "cdc_schema_evolution_audit",
+     "mongo_cdc_spark.cdc.transform", "schema_fingerprints"),
+]
+
+
+@pytest.mark.parametrize("module,twin,op_module,op", _REWIRED_TWINS,
+                         ids=[t[1] for t in _REWIRED_TWINS])
+def test_replay_twin_runs_its_streaming_operator(
+        spark, sf_dir, monkeypatch, module, twin, op_module, op):
+    """Each graded replay twin must build its plan through the streaming
+    operator it stands for, so the oracle grades the code that ships:
+    with the operator patched to raise, the twin raises too. A twin
+    that re-types the operator's aggregation would not."""
+    import importlib
+
+    class Called(Exception):
+        pass
+
+    def boom(*args, **kwargs):
+        raise Called(op)
+
+    monkeypatch.setattr(importlib.import_module(op_module), op, boom)
+    query = getattr(importlib.import_module(
+        f"mongo_cdc_spark.operators.{module}"), twin)
+    with pytest.raises(Called):
+        query(spark, sf_dir)
