@@ -87,15 +87,19 @@ def view_deltas(events: DataFrame, group_field: str,
             .agg(F.sum("d_cnt").alias("d_cnt"), F.sum("d_sum").alias("d_sum")))
 
 
-def _applied_batch(spark: SparkSession, view_path: str) -> int:
-    """Highest batch id already folded into the view (−1 if none).
+def _read_view(spark: SparkSession, view_path: str) -> DataFrame | None:
+    """The view as written so far, or None before its first batch.
     Existence is probed via the Hadoop FS (not except-squashing — a real
     read error must fail the batch so the checkpoint retries it)."""
     fs, p = hadoop_fs(spark, view_path)
-    if not fs.exists(p):
+    return spark.read.parquet(view_path) if fs.exists(p) else None
+
+
+def _applied_batch(view: DataFrame | None) -> int:
+    """Highest batch id already folded into the view (−1 if none)."""
+    if view is None:
         return -1
-    row = spark.read.parquet(view_path).agg(
-        F.max("_applied_batch")).collect()[0]
+    row = view.agg(F.max("_applied_batch")).collect()[0]
     return -1 if row[0] is None else int(row[0])
 
 
@@ -109,12 +113,13 @@ def apply_deltas_to_view(spark: SparkSession, view_path: str,
     batch (at-least-once foreachBatch) sees batch_id <= _applied_batch
     and returns without touching state. Groups whose count reaches 0
     are dropped (the view contains only live groups)."""
-    last = _applied_batch(spark, view_path)
+    view = _read_view(spark, view_path)
+    last = _applied_batch(view)
     if batch_id <= last:
         return
     deltas = view_deltas(events, group_field, value_field)
     if last >= 0:
-        old = spark.read.parquet(view_path).select("g", "cnt", "total")
+        old = view.select("g", "cnt", "total")
         merged = (old.join(deltas, "g", "full_outer")
                   .select(
                       "g",

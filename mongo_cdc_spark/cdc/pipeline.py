@@ -50,11 +50,9 @@ def read_change_stream_files(spark: SparkSession, path: str,
     the _corrupt_record column) for DLQ routing via relay_with_dlq.
 
     Text lines through parse_change_events relay the same records
-    (tests/test_cdc_pipeline.py pins it), except on two inputs:
-    - a line holding a top-level JSON array: this source delivers each
-      element as an event, parse_change_events rejects the line;
-    - a blank line: this source skips it, parse_change_events with
-      keep_corrupt=True emits an all-null reject row with no raw text."""
+    (tests/test_cdc_pipeline.py pins it), except a line holding a
+    top-level JSON array: this source delivers each element as an
+    event, parse_change_events rejects the line."""
     raw = (spark.readStream
            .schema(CHANGE_EVENT_SCHEMA_PERMISSIVE)
            .option("mode", "PERMISSIVE")

@@ -30,16 +30,26 @@ def valid_event() -> Column:
             & F.col("documentKey._id").isNotNull())
 
 
+# A value of JSON whitespace only: from_json reads it as an all-null
+# row with no corrupt text, the JSON file source skips the line.
+_BLANK = r"^[ \t\r\n]*$"
+
+
 def parse_events(raw: DataFrame, schema: T.StructType,
                  value_col: str = "value",
                  keep_corrupt: bool = False) -> DataFrame:
     """Decode raw JSON events into `schema` + CORRUPT_COL, dropping invalid
     ones unless keep_corrupt. Behind a Generate node, the parse cannot be
-    copied into the pushed-down filter, so each event is parsed once."""
+    copied into the pushed-down filter, so each event is parsed once.
+    With keep_corrupt, blank values are skipped, as the JSON file source
+    skips blank lines, so every reject carries its raw text."""
     permissive = T.StructType(
         schema.fields + [T.StructField(CORRUPT_COL, T.StringType())])
+    text = F.col(value_col).cast("string")
+    if keep_corrupt:
+        raw = raw.filter(text.isNull() | ~text.rlike(_BLANK))
     parsed = raw.select(F.inline(F.array(F.from_json(
-        F.col(value_col).cast("string"), permissive, {"mode": "PERMISSIVE"}))))
+        text, permissive, {"mode": "PERMISSIVE"}))))
     if keep_corrupt:
         return parsed
     return parsed.filter(valid_event()).drop(CORRUPT_COL)

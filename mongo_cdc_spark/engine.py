@@ -57,6 +57,7 @@ from mongo_cdc_spark.cdc.pipeline import (
 )
 from mongo_cdc_spark.cdc.transform import to_kafka_records
 from mongo_cdc_spark.config import Config
+from mongo_cdc_spark.io import load_table, read_parquet
 
 Transform = Callable[[DataFrame], DataFrame]
 
@@ -168,9 +169,8 @@ class Pipeline:
             return read_change_stream_kafka(
                 self._spark, cfg.get("config") or Config(), cfg["topic"])
         if kind == "table":
-            from mongo_cdc_spark.io import load_table
             return load_table(self._spark, cfg["sf_dir"], cfg["table"])
-        return self._spark.read.parquet(cfg["path"])
+        return read_parquet(self._spark, cfg["path"])
 
     # -------------------------------------------------------- launch
     def start(self) -> StreamingQuery:

@@ -4,6 +4,7 @@ connection with the sf0.001 fixture views, and the sf dir constants."""
 from __future__ import annotations
 
 import sys
+import uuid
 from pathlib import Path
 
 import duckdb
@@ -36,3 +37,22 @@ def oracle():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """spark_jobs(fn) -> (fn(), the number of Spark jobs fn ran),
+    counted under a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return run

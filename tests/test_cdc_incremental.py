@@ -68,6 +68,21 @@ def test_apply_folds_and_drops_empty_groups(spark, tmp_path: Path):
     assert _view(spark, view) == {"B": (2, 13.0)}
 
 
+def test_non_first_batch_reads_the_view_once(spark, tmp_path: Path,
+                                             spark_jobs):
+    """A non-first batch reads the view once, for both its applied batch
+    id and the merge: one schema-inference job, 7 jobs in all (8 when
+    the view was read twice)."""
+    view = str(tmp_path / "view")
+    apply_deltas_to_view(spark, view, _events_df(spark, BATCH0), 0,
+                         "seg", "amt")
+    events = _events_df(spark, BATCH1)
+    _, jobs = spark_jobs(lambda: apply_deltas_to_view(
+        spark, view, events, 1, "seg", "amt"))
+    assert 0 < jobs <= 7
+    assert _view(spark, view) == {"B": (2, 13.0)}
+
+
 def test_apply_is_idempotent_under_replay(spark, tmp_path: Path):
     view = str(tmp_path / "view")
     apply_deltas_to_view(spark, view, _events_df(spark, BATCH0), 0,

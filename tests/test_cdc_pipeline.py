@@ -182,6 +182,37 @@ def test_relay_with_dlq_routes_rejects(spark, tmp_path: Path):
     assert any(bad_df._corrupt_record.fillna("").str.startswith("{corrupt"))
 
 
+def test_file_source_and_text_parse_send_the_same_dlq_rows(
+        spark, tmp_path: Path):
+    """With keep_corrupt, a blank or whitespace-only line is skipped by
+    both parse paths, as the JSON file source skips it, so every DLQ
+    row carries raw text to replay."""
+    from mongo_cdc_spark.cdc.pipeline import relay_with_dlq
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "events.json").write_text(
+        "\n".join([json.dumps(_event()), "{corrupt", "", " \t "]) + "\n")
+
+    def dlq_rows(events, name):
+        bad = []
+        q = relay_with_dlq(events, lambda b, i: None,
+                           lambda b, i: bad.extend(b.collect()),
+                           checkpoint=str(tmp_path / name))
+        q.processAllAvailable()
+        q.stop()
+        return sorted(bad, key=repr)
+
+    files = dlq_rows(
+        read_change_stream_files(spark, str(src), keep_corrupt=True),
+        "ck_files")
+    text = dlq_rows(
+        parse_change_events(spark.readStream.text(str(src)),
+                            keep_corrupt=True), "ck_text")
+    assert [r._corrupt_record for r in files] == ["{corrupt"]
+    assert text == files
+
+
 def test_relay_topic_rates_windows(spark, tmp_path: Path):
     """Per-topic windowed counts over the relay stream (observability)."""
     from mongo_cdc_spark.cdc.pipeline import relay_topic_rates

@@ -3,9 +3,12 @@ writes, and the explicit-schema rule for text formats."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 
-from mongo_cdc_spark.io import load_table, read_batch, write_batch
+from mongo_cdc_spark.io import load_table, read_batch, read_parquet, write_batch
 
 
 def test_json_csv_require_schema(spark, tmp_path):
@@ -94,3 +97,79 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     # partition filter must become directory pruning, not a data filter
     assert pruned.count() == src.filter("n_regionkey = 0").count()
     assert "PartitionFilters: [isnotnull(n_regionkey" in plan
+
+
+def test_repeat_load_of_an_unchanged_table_runs_no_job(
+        spark, sf_dir, spark_jobs):
+    """The schema of an unchanged file is inferred once: a second load
+    launches no Spark job and has the schema fresh inference gives."""
+    first, _ = spark_jobs(lambda: load_table(spark, sf_dir, "lineitem"))
+    again, jobs = spark_jobs(lambda: load_table(spark, sf_dir, "lineitem"))
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert again.schema == spark.read.parquet(
+        f"{sf_dir}/lineitem.parquet").schema
+
+
+def test_rewritten_file_is_read_with_its_new_schema(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    assert read_parquet(spark, path).columns == ["a", "b"]
+    pq.write_table(pa.table({"c": [1.5], "d": [True], "e": [7]}), path)
+    df = read_parquet(spark, path)
+    assert df.columns == ["c", "d", "e"]
+    assert [tuple(r) for r in df.collect()] == [(1.5, True, 7)]
+
+
+def test_overwritten_spark_directory_is_read_with_its_new_schema(
+        spark, tmp_path):
+    path = str(tmp_path / "d")
+    spark.range(3).selectExpr("id AS a").write.parquet(path)
+    assert read_parquet(spark, path).columns == ["a"]
+    (spark.range(4).selectExpr("id AS b", "id * 2 AS c")
+     .write.mode("overwrite").parquet(path))
+    df = read_parquet(spark, path)
+    assert df.columns == ["b", "c"]
+    assert df.count() == 4
+
+
+def test_appended_spark_directory_is_read_with_its_new_schema(
+        spark, tmp_path):
+    """With schema merging on, an append that adds a column changes the
+    inferred schema; the memo must not hide it."""
+    path = str(tmp_path / "d")
+    key = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(key, "true")
+    try:
+        spark.range(3).selectExpr("id AS a").write.parquet(path)
+        assert read_parquet(spark, path).columns == ["a"]
+        (spark.range(2).selectExpr("id AS a", "id AS extra")
+         .write.mode("append").parquet(path))
+        df = read_parquet(spark, path)
+        assert df.schema == spark.read.parquet(path).schema
+        assert sorted(df.columns) == ["a", "extra"]
+        assert df.count() == 5
+    finally:
+        spark.conf.unset(key)
+
+
+def test_schema_conf_flip_gives_the_fresh_inference(spark, tmp_path):
+    """binaryAsString is part of the memo key: after flipping it, a load
+    has the schema that fresh inference gives under the new value."""
+    pq.write_table(pa.table({"k": [1], "raw": pa.array([b"ab"])}),
+                   str(tmp_path / "blob.parquet"))
+    key = "spark.sql.parquet.binaryAsString"
+    before = load_table(spark, str(tmp_path), "blob").schema
+    spark.conf.set(key, "true")
+    try:
+        after = load_table(spark, str(tmp_path), "blob").schema
+        fresh = spark.read.parquet(str(tmp_path / "blob.parquet")).schema
+    finally:
+        spark.conf.unset(key)
+    assert after == fresh
+    assert before["raw"].dataType != after["raw"].dataType
+
+
+def test_missing_table_raises_path_not_found(spark, tmp_path):
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        load_table(spark, str(tmp_path), "nation")

@@ -17,6 +17,14 @@ def test_bruteforce_topk_shape(spark, sf_dir):
         assert (grp.sort_values("rank").cos_sim.diff().dropna() <= 1e-12).all()
 
 
+def test_bruteforce_scores_on_the_jvm_fold(spark, sf_dir):
+    """The 5-probe × N scoring uses the HOF fold, not the Arrow hop:
+    the plan has no ArrowEvalPython node."""
+    df = similarity.knn_bruteforce_cosine(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+
+
 def test_lsh_hyperplane_recall(spark, sf_dir):
     """LSH top-k only searches the probe's bucket; with 4 planes (16
     buckets) over clustered fixture vectors, recall vs brute force must

@@ -673,17 +673,11 @@ def test_trending_topk_stream_matches_batch_replay(spark, tmp_path):
            .sort_values(["window_start", "rank"])
            .reset_index(drop=True))
     batch = spark.read.schema(stream.schema).json(str(src))
-    wc = (batch.groupBy(F.window("ts", "1 hour").alias("w"),
-                        "event_type")
-          .agg(F.count(F.lit(1)).alias("n"),
-               F.round(F.sum("value"), 4).alias("total_value")))
     from pyspark.sql import Window as W
-    rw = W.partitionBy("w").orderBy(F.desc("n"), "event_type")
-    want = (wc.withColumn("rank", F.row_number().over(rw))
+    rw = W.partitionBy("window_start").orderBy(F.desc("n"), "event_type")
+    want = (tumbling_window_counts(batch)
+            .withColumn("rank", F.row_number().over(rw))
             .filter(F.col("rank") <= 3)
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"),
-                    "event_type", "n", "total_value", "rank")
             .toPandas()
             .sort_values(["window_start", "rank"])
             .reset_index(drop=True))

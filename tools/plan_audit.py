@@ -126,8 +126,8 @@ PYTHON_OK = {"multimodal_fake_decode",
              # scoring projection only:
              "ann_range_search", "ann_recall_eval",
              "dedup_embedding_cosine", "dedup_semantic_semdedup",
-             "kmeans_silhouette_eval", "knn_bruteforce_cosine",
-             "knn_ivf_centroid", "knn_pq_quantize", "knn_sq8_search",
+             "kmeans_silhouette_eval", "knn_ivf_centroid",
+             "knn_pq_quantize", "knn_sq8_search",
              "mine_hard_negatives", "similarity_jl_projection_audit",
              "similarity_mips_norm_augment",
              "similarity_pair_distance_histogram",
