@@ -16,10 +16,19 @@ periodically). Whole-bucket overwrite is idempotent, so checkpointed
 replay of a batch converges (exactly-once table state over an
 at-least-once stream).
 
-Each batch merges in ONE write job that reads the touched buckets and
+Each batch costs one narrow pass and one shuffle. The pass projects
+the batch to its merge columns and its `bucket`, caches it, and
+observes the touched buckets on a `noop` write. The shuffle
+hash-partitions the batch together with the snapshot rows of those
+buckets (a partition filter, so no other bucket is read) on `bucket`.
+That partitioning already satisfies the merge window's clustering on
+(bucket, doc_key), so the plan gets no second exchange, and the
+window's sort on (bucket, ...) is the ordering the partitioned writer
+needs, so it adds no sort. The write reads the touched buckets and
 overwrites them with no materialization in between: dynamic overwrite
-writes under `<snapshot>/.spark-staging-<jobId>/` and swaps a `bucket=N`
-dir in only at job commit, after every task has finished reading.
+writes under `<snapshot>/.spark-staging-<jobId>/` and swaps a
+`bucket=N` dir in only at job commit, after every task has finished
+reading.
 """
 
 from __future__ import annotations
@@ -37,15 +46,21 @@ _SNAPSHOT_SCHEMA = ("doc_key string, doc string, updated_at timestamp, "
                     "bucket int")
 
 
+def _newest_first(time_col: str, token_col: str) -> list:
+    """The change-stream tie-break: latest clusterTime first, and the
+    higher resume token (monotone within a change stream) first among
+    equal clusterTimes."""
+    return [F.col(time_col).desc(), F.col(token_col).desc()]
+
+
 def latest_change_per_key(events: DataFrame) -> DataFrame:
-    """Reduce a batch of change events to one winner per document key:
-    latest clusterTime wins, resume token (_id._data, monotone within a
-    change stream) breaks clusterTime ties.
+    """Reduce a batch of change events to one winner per document key,
+    ordered by `_newest_first` on (clusterTime, _id._data).
 
     One shuffle on the document key; row_number (not groupBy+max+join)
     keeps it a single window pass."""
     w = (Window.partitionBy(F.col("documentKey._id"))
-         .orderBy(F.col("clusterTime").desc(), F.col("_id._data").desc()))
+         .orderBy(*_newest_first("clusterTime", "_id._data")))
     return (events
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
@@ -57,45 +72,57 @@ def apply_batch_to_snapshot(spark: SparkSession, snapshot_path: str,
     """Merge one batch of change events into the parquet snapshot.
 
     Snapshot schema: (doc_key string, doc string [JSON post-image],
-    updated_at timestamp, bucket int). Deletes drop the key; upserts
-    replace it. Only buckets present in the batch are rewritten
-    (requires partitionOverwriteMode=dynamic, set per-write below)."""
-    latest = latest_change_per_key(events).select(
+    updated_at timestamp, bucket int). Any key in the batch masks its
+    snapshot row: the batch's newest event per key wins, a delete drops
+    the key and an upsert replaces it. Only buckets present in the
+    batch are rewritten (requires partitionOverwriteMode=dynamic, set
+    per-write below)."""
+    batch = events.select(
         F.col("documentKey._id").alias("doc_key"),
         F.col("operationType").alias("op"),
         F.col("fullDocument").alias("doc"),
         F.col("clusterTime").alias("updated_at"),
-    ).withColumn("bucket", F.pmod(F.xxhash64("doc_key"), F.lit(n_buckets))
-                 .cast("int"))
-    latest.persist()
+        F.col("_id._data").alias("token"),
+        F.lit(1).alias("src"),
+        F.pmod(F.xxhash64(F.col("documentKey._id")), F.lit(n_buckets))
+        .cast("int").alias("bucket"),
+    )
+    batch.persist()
     try:
-        touched = [r.bucket for r in latest.select("bucket")
-                   .distinct().collect()]
+        seen = Observation()
+        (batch.observe(seen, F.collect_set("bucket").alias("touched"))
+         .write.format("noop").mode("overwrite").save())
+        touched = seen.get["touched"]
         if not touched:
             return
         # Probe existence explicitly instead of catching read errors:
         # a broad except here would treat ANY failure (transient IO,
-        # permissions, corrupt footer) as "first batch" and skip the
-        # keep-leg anti-join — the dynamic overwrite would then silently
-        # drop every pre-existing document in the touched buckets. A
-        # real read error must fail the batch so the streaming
-        # checkpoint retries it.
+        # permissions, corrupt footer) as "first batch" and leave the
+        # snapshot rows out of the merge — the dynamic overwrite would
+        # then silently drop every pre-existing document in the
+        # touched buckets. A real read error must fail the batch so the
+        # streaming checkpoint retries it.
         fs, probe = hadoop_fs(spark, snapshot_path)
-        merged = (latest.filter(F.col("op").isin(*_UPSERT_OPS))
-                  .select("doc_key", "doc", "updated_at", "bucket"))
+        merged = batch
         if fs.exists(probe):
-            # `keep` may read the files this write replaces: the
-            # staging-dir commit swaps them only after every task read.
-            # `latest` has one row per key, so no distinct is needed
-            keep = (spark.read.schema(_SNAPSHOT_SCHEMA)
+            # the merge may read the files this write replaces: the
+            # staging-dir commit swaps them only after every task read
+            snap = (spark.read.schema(_SNAPSHOT_SCHEMA)
                     .parquet(snapshot_path)
                     .filter(F.col("bucket").isin(touched))
-                    .join(F.broadcast(latest.select("doc_key")),
-                          "doc_key", "left_anti"))
-            merged = keep.unionByName(merged)
+                    .withColumn("src", F.lit(0)))
+            merged = snap.unionByName(batch, allowMissingColumns=True)
+        # src desc: a batch row beats the snapshot row of its key
+        w = (Window.partitionBy("bucket", "doc_key")
+             .orderBy(F.col("src").desc(),
+                      *_newest_first("updated_at", "token")))
         # the buckets that receive rows are gathered by the write itself
         obs = Observation()
         (merged.repartition("bucket")
+         .withColumn("__rn", F.row_number().over(w))
+         .filter((F.col("__rn") == 1)
+                 & ((F.col("src") == 0) | F.col("op").isin(*_UPSERT_OPS)))
+         .select("doc_key", "doc", "updated_at", "bucket")
          .observe(obs, F.collect_set("bucket").alias("nonempty"))
          .write.mode("overwrite")
          .partitionBy("bucket")
@@ -111,7 +138,7 @@ def apply_batch_to_snapshot(spark: SparkSession, snapshot_path: str,
                 if fs.exists(p):
                     fs.delete(p, True)
     finally:
-        latest.unpersist()
+        batch.unpersist()
 
 
 def materialize_stream(events: DataFrame, snapshot_path: str,
@@ -132,10 +159,11 @@ def materialize_stream(events: DataFrame, snapshot_path: str,
 
 
 def compact_snapshot(spark: SparkSession, snapshot_path: str) -> dict:
-    """Compact the snapshot's small files: every micro-batch rewrite
-    leaves one file per shuffle task per touched bucket, so a
-    long-running apply accumulates files until scans pay per-file
-    open/footer costs. Rewrites each bucket partition into ONE file
+    """Compact the snapshot's small files. The apply path leaves exactly
+    one file per bucket it rewrites (its shuffle puts each bucket in one
+    task), but other writers (a `maxRecordsPerFile` cap, appends, skew
+    splits) leave many, and scans then pay per-file open/footer costs.
+    Rewrites each bucket partition into ONE file
     (content-identical — same rows, same schema; hash-partitioning on
     `bucket` puts each bucket's rows in exactly one task, and the task
     count equals the live bucket count so buckets compact in parallel)

@@ -97,13 +97,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Nanos are read as int64 (nanosAsLong: Spark's vectorized reader
     rejects them) and divided down to micros, which is lossless; micros
     read as timestamp_ntz and are cast, which under the UTC session
-    timezone keeps the micros value."""
+    timezone keeps the micros value.
+
+    nanosAsLong is set for every table, not just `events`: it is part of
+    the schema memo key, so setting it only for `events` would make every
+    table loaded before it a memo miss afterwards. It stays set, since
+    the reader reads it again when the query runs."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
     if name != "events":
         return read_parquet(spark, path)
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = read_parquet(spark, path)
     ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, LongType):

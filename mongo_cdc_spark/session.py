@@ -165,6 +165,10 @@ def get_spark(app_name: str = "mongo_cdc_spark", master: str | None = None,
                .config("spark.driver.maxResultSize", "4g"))
     for k, v in _BASE_CONF.items():
         builder = builder.config(k, v)
+    # Python UDFs defined at module level pickle by reference, so the
+    # JVM-spawned workers must import this package from any cwd
+    builder = builder.config("spark.executorEnv.PYTHONPATH",
+                             str(Path(__file__).resolve().parent.parent))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -3,6 +3,11 @@ tools/retime.py and tools/scale_sweep.py share."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import bench
 
 
@@ -29,3 +34,22 @@ def test_time_query_isolates_errors_and_times_every_rep(spark, sf_dir):
     secs, err = bench.time_query(spark, "ok", ok, sf_dir, 3)
     assert err is None and len(secs) == 3
     assert all(s >= 0 for s in secs)
+
+
+def test_retime_runs_a_python_udf_query_from_outside_the_checkout(
+        sf_dir, tmp_path):
+    """The JVM-spawned Python workers import the engine by name; run
+    from another directory with no PYTHONPATH, a tool's Arrow-UDF query
+    must still find the package (get_spark puts it on the workers'
+    path)."""
+    repo = Path(bench.__file__).resolve().parent
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g",
+               SPARK_GRAFT_BENCH_REPS="1")
+    done = subprocess.run(
+        [sys.executable, str(repo / "tools" / "retime.py"), sf_dir,
+         "knn_sq8_search"],
+        cwd=tmp_path, env=env, capture_output=True, text=True,
+        timeout=600)
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert "knn_sq8_search" in done.stdout.splitlines()[-1]

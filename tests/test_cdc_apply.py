@@ -224,10 +224,19 @@ def test_apply_replayed_batch_is_idempotent(spark, tmp_path: Path):
     assert len(once) == 32
 
 
+def _last_execution_id(sql_store) -> int:
+    """Id of the newest SQL execution the status store holds (it keeps
+    the most recent ones, in id order), or -1."""
+    executions = sql_store.executionsList()
+    n = executions.size()
+    return executions.apply(n - 1).executionId() if n else -1
+
+
 def test_apply_runs_one_write_job_without_checkpoint(
         spark, tmp_path: Path):
-    """A non-first apply is one reduction pass plus one write job: at
-    most 7 Spark jobs, none of them a localCheckpoint."""
+    """A non-first apply is one narrow pass plus one shuffle: at most 3
+    Spark jobs, none of them a localCheckpoint, and a write plan with
+    exactly one shuffle exchange and no broadcast."""
     snap = str(tmp_path / "snap")
     _preload(spark, snap, 32, 4)
     events = _events_df(spark, [
@@ -235,6 +244,9 @@ def test_apply_runs_one_write_job_without_checkpoint(
             ts="2024-11-08T00:05:00Z", rt=f"u{i}") for i in range(0, 32, 3)
     ])
     sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    last_before = _last_execution_id(sql_store)
     group = f"apply-jobs-{tmp_path.name}"
     sc.setJobGroup(group, group)
     try:
@@ -246,8 +258,52 @@ def test_apply_runs_one_write_job_without_checkpoint(
     store = sc._jsc.sc().statusStore()
     ids = sc.statusTracker().getJobIdsForGroup(group)
     names = [store.job(j).name() for j in ids]
-    assert 0 < len(ids) <= 7, names
+    assert 0 < len(ids) <= 3, names
     assert not [n for n in names if "localCheckpoint" in n], names
+
+    executions = sql_store.executionsList()
+    plans = []
+    for i in range(executions.size()):
+        e = executions.apply(i)
+        if e.executionId() <= last_before:
+            continue
+        nodes = sql_store.planGraph(e.executionId()).allNodes()
+        plans.append([nodes.apply(j).name() for j in range(nodes.size())])
+    writes = [p for p in plans
+              if "Execute InsertIntoHadoopFsRelationCommand" in p]
+    assert len(writes) == 1, plans
+    assert writes[0].count("Exchange") == 1, writes[0]
+    assert "BroadcastExchange" not in writes[0], writes[0]
+
+
+def test_apply_batch_wins_by_clustertime_then_resume_token(
+        spark, tmp_path: Path):
+    """The merge's tie-break, through a real apply: the newest batch
+    event per key wins (higher resume token on a clusterTime tie), a
+    delete drops the key, and any batch event beats the snapshot row
+    of its key, however late that row's updated_at."""
+    snap = str(tmp_path / "snap")
+    apply_batch_to_snapshot(spark, snap, _events_df(spark, [
+        _ev("gone", doc='{"v":0}', rt="p1"),
+        _ev("late", doc='{"v":0}', ts="2030-01-01T00:00:00Z", rt="p2"),
+    ]), n_buckets=4)
+    t1, t2 = "2024-11-08T00:05:00Z", "2024-11-08T00:06:00Z"
+    apply_batch_to_snapshot(spark, snap, _events_df(spark, [
+        # same clusterTime: r3 beats r2 whatever the arrival order
+        _ev("tie", doc='{"v":1}', ts=t1, rt="r1"),
+        _ev("tie", op="update", doc='{"v":3}', ts=t1, rt="r3"),
+        _ev("tie", op="update", doc='{"v":2}', ts=t1, rt="r2"),
+        # insert then delete: the key leaves the snapshot
+        _ev("gone", doc='{"v":4}', ts=t1, rt="r4"),
+        _ev("gone", op="delete", ts=t2, rt="r5"),
+        # delete then insert: the insert stays
+        _ev("back", op="delete", ts=t1, rt="r6"),
+        _ev("back", doc='{"v":7}', ts=t2, rt="r7"),
+        # an older batch update still replaces the snapshot row
+        _ev("late", op="update", doc='{"v":8}', ts=t1, rt="r8"),
+    ]), n_buckets=4)
+    assert _snapshot(spark, snap) == {
+        "tie": '{"v":3}', "back": '{"v":7}', "late": '{"v":8}'}
 
 
 def test_materialize_stream_end_to_end(spark, tmp_path: Path):

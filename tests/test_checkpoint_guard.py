@@ -95,9 +95,11 @@ _CHECKPOINT_ALLOWLIST: frozenset[tuple[str, str]] = frozenset({
     ("mongo_cdc_spark/operators/graph.py", "graph_kcore_decomposition"),
     ("mongo_cdc_spark/operators/similarity.py", "knn_mmr_rerank"),
     # -- CDC read points and static overwrites --
-    # apply_batch_to_snapshot needs no entry: its dynamic overwrite
-    # stages output and swaps bucket dirs in only at job commit, so it
-    # may read the files it replaces. These three still checkpoint:
+    # apply_batch_to_snapshot needs no entry: its one shuffle merges
+    # the cached batch with the touched buckets' rows, and its dynamic
+    # overwrite stages output and swaps bucket dirs in only at job
+    # commit, so it may read the files it replaces. These three still
+    # checkpoint:
     # compact_snapshot's checkpoint is the read point its lost-update
     # listing compare is taken against; compact_merge_on_read's is the
     # one read of base + logs that its row count and new base share

@@ -111,6 +111,18 @@ def test_repeat_load_of_an_unchanged_table_runs_no_job(
         f"{sf_dir}/lineitem.parquet").schema
 
 
+def test_loading_events_keeps_other_tables_memoized(
+        spark, sf_dir, spark_jobs):
+    """Loading `events` changes no conf in the memo key of the other
+    tables: lineitem, then events, then lineitem again runs no job on
+    the third load."""
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    load_table(spark, sf_dir, "lineitem")
+    load_table(spark, sf_dir, "events")
+    _, jobs = spark_jobs(lambda: load_table(spark, sf_dir, "lineitem"))
+    assert jobs == 0
+
+
 def test_rewritten_file_is_read_with_its_new_schema(spark, tmp_path):
     path = str(tmp_path / "t.parquet")
     pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
