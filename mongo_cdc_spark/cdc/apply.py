@@ -53,6 +53,13 @@ def _newest_first(time_col: str, token_col: str) -> list:
     return [F.col(time_col).desc(), F.col(token_col).desc()]
 
 
+def _bucket(key, n_buckets: int):
+    """The bucket of a document key column, pmod(xxhash64(key),
+    n_buckets): the partition column of both the copy-on-write
+    snapshot and the merge-on-read log."""
+    return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
+
+
 def latest_change_per_key(events: DataFrame) -> DataFrame:
     """Reduce a batch of change events to one winner per document key,
     ordered by `_newest_first` on (clusterTime, _id._data).
@@ -84,8 +91,7 @@ def apply_batch_to_snapshot(spark: SparkSession, snapshot_path: str,
         F.col("clusterTime").alias("updated_at"),
         F.col("_id._data").alias("token"),
         F.lit(1).alias("src"),
-        F.pmod(F.xxhash64(F.col("documentKey._id")), F.lit(n_buckets))
-        .cast("int").alias("bucket"),
+        _bucket(F.col("documentKey._id"), n_buckets).alias("bucket"),
     )
     batch.persist()
     try:
@@ -242,71 +248,51 @@ def compact_snapshot(spark: SparkSession, snapshot_path: str) -> dict:
 # The copy-on-write path above (apply_batch_to_snapshot) rewrites every
 # touched bucket per batch — O(bucket size) write amplification even
 # for a single-row update. The merge-on-read surface below is the
-# Delta/Iceberg-style alternative: a batch APPENDS an O(batch)-sized
-# delta-log file plus a delete-vector file that marks superseded base
-# rows dead; the read path reconstructs current state as
-# (base MINUS delete-vector keys) UNION (latest delta winner per key) —
-# the dv/ files supply the mask, so base masking (including VERSION AS
-# OF masking) scans only the narrow (doc_key, seq, bucket) vectors,
-# never the delta's doc payloads — and a periodic compaction folds
-# everything back into a fresh base. Write cost per batch drops from
-# O(touched buckets × bucket size) to O(batch); reads pay the resolve
-# until the next compaction — the standard MoR trade.
+# Delta/Iceberg-style alternative: a batch APPENDS its per-key winners
+# to one O(batch)-sized log, delta/, and the read path reconstructs
+# current state as (base rows whose key is in no delta row) UNION
+# (newest delta row per key, unless it is a delete). Column pruning
+# keeps the delta's doc payloads out of the base-row mask's scan. A
+# periodic compaction folds everything back into a fresh base. Write
+# cost per batch drops from O(touched buckets × bucket size) to
+# O(batch); reads pay the resolve until the next compaction — the
+# standard MoR trade.
 #
 # Compaction commits via VERSIONED base directories (base-1, base-2,
 # ...): the new snapshot is written to a fresh base-(n+1) dir — never
 # overwriting the dir it was read from — and becomes current the
-# moment its _SUCCESS marker lands; old base + delta/ + dv/ deletion
-# is pure cleanup AFTER that commit point. Crash mid-write leaves a
+# moment its _SUCCESS marker lands; old base + delta/ deletion is pure
+# cleanup AFTER that commit point. Crash mid-write leaves a
 # _SUCCESS-less dir readers ignore; crash mid-cleanup leaves the old
-# logs replaying onto the already-resolved new base, which is
+# log replaying onto the already-resolved new base, which is
 # idempotent (the delta's winners re-mask and re-insert the identical
-# rows; deletes of absent keys no-op). A legacy unversioned base/ dir
-# is still honored as version 0.
-
-MERGE_POLICIES = ("last_writer_wins", "first_writer_wins")
+# rows; deletes of absent keys no-op). A table with no committed base
+# reads an empty one.
 
 
-def resolve_current_state(base: DataFrame, delta: DataFrame,
-                          policy: str = "last_writer_wins",
-                          mask_keys: DataFrame | None = None) -> DataFrame:
+def resolve_current_state(base: DataFrame, delta: DataFrame) -> DataFrame:
     """Pure-frame MERGE resolution: current snapshot rows from a base
     frame (doc_key, doc, updated_at, bucket) and a delta log
     (doc_key, op, doc, updated_at, seq, bucket).
 
-    Conflict policy picks the winning writer among delta rows for the
-    same key: last_writer_wins takes the max (updated_at, seq) event
-    (CDC semantics — seq is the monotone resume-token order, breaking
-    clusterTime ties); first_writer_wins takes the min (the
-    reject-out-of-order MERGE policy: once a key is written, stale
-    writers lose). A key present in the delta ALWAYS masks its base
-    row (that is the delete-vector contract); the winner's op decides
-    whether a replacement row exists (upsert) or not (delete).
-
-    mask_keys, when given, supplies the base-row mask directly — the
-    file-backed read path passes the dv/ delete vectors here, whose
-    (doc_key, seq, bucket) rows are exactly the delta's keys per
-    commit, so masking never touches the delta's doc payload column.
-    When None (pure-frame callers), the mask is derived from the
-    delta itself — identical semantics.
+    The winning delta row per key is the newest by `_newest_first` on
+    (updated_at, seq) — CDC semantics, seq being the monotone commit
+    order that breaks updated_at ties. A key present in the delta
+    ALWAYS masks its base row; the winner's op decides whether a
+    replacement row exists (upsert) or not (delete).
 
     One shuffle on doc_key for the rank window (partitioned, bounded
     by per-key event counts); the base-side anti-join broadcasts the
-    distinct masked keys (a batch is small next to the table)."""
-    if policy not in MERGE_POLICIES:
-        raise ValueError(f"unknown merge policy: {policy!r} "
-                         f"(one of {MERGE_POLICIES})")
-    order = [F.col("updated_at"), F.col("seq")]
-    if policy == "last_writer_wins":
-        order = [c.desc() for c in order]
-    w = Window.partitionBy("doc_key").orderBy(*order)
+    distinct delta keys (a batch is small next to the table), whose
+    scan column pruning keeps free of the doc payloads."""
+    w = (Window.partitionBy("doc_key")
+         .orderBy(*_newest_first("updated_at", "seq")))
     winners = (delta
                .withColumn("__rn", F.row_number().over(w))
                .filter(F.col("__rn") == 1)
                .drop("__rn"))
-    mask = (mask_keys if mask_keys is not None else delta)
     survivors = base.join(
-        F.broadcast(mask.select("doc_key").distinct()),
+        F.broadcast(delta.select("doc_key").distinct()),
         "doc_key", "left_anti")
     fresh = (winners.filter(F.col("op").isin(*_UPSERT_OPS))
              .select("doc_key", "doc", "updated_at", "bucket"))
@@ -318,49 +304,36 @@ def merge_on_read_apply(spark: SparkSession, table_path: str,
                         n_buckets: int = 16) -> None:
     """Append one batch of change events as a MoR delta commit.
 
-    Layout under table_path: base[-N]/ (compacted snapshot, versioned
-    by compaction), delta/ (append-only log of resolved per-batch
-    winners), dv/ (append-only delete vector: every key the batch
-    superseded, with the commit seq — the read path's base-row mask).
-    Both appends are O(batch); nothing is rewritten. batch_seq must be
-    monotone (foreachBatch's epoch id) — it totals-orders commits so
-    replaying a checkpointed batch appends byte-identical rows that
-    the seq-deduped read path collapses (idempotent).
+    Layout under table_path: base-N/ (compacted snapshot, versioned
+    by compaction) and delta/ (append-only log of resolved per-batch
+    winners). A commit is one O(batch) append; nothing is rewritten.
+    batch_seq must be monotone (foreachBatch's epoch id) — it
+    totally orders commits, so replaying a checkpointed batch appends
+    identical rows that the seq-deduped read path collapses
+    (idempotent).
 
-    Commit ordering: dv BEFORE delta. A crash between the two appends
-    leaves the batch's keys masked with no winners yet — interim reads
-    UNDER-report (the touched rows vanish until the checkpointed
-    replay re-appends both files and the dedup collapses the retry);
-    the reverse order would instead DOUBLE-report (unmasked base row +
-    new winner for the same key), breaking the key-uniqueness contract
-    downstream consumers rely on. Replay heals either way; the chosen
-    order makes the torn window's anomaly the benign one."""
-    latest = latest_change_per_key(events).select(
+    A key's base-row mask and its winner come from the same delta
+    row, so an append whose files land only in part leaves each key
+    of the batch either fully applied or untouched — never masked
+    without a winner, never doubled — and the replay completes it."""
+    (latest_change_per_key(events).select(
         F.col("documentKey._id").alias("doc_key"),
         F.col("operationType").alias("op"),
         F.col("fullDocument").alias("doc"),
         F.col("clusterTime").alias("updated_at"),
         F.lit(batch_seq).cast("long").alias("seq"),
-    ).withColumn("bucket", F.pmod(F.xxhash64("doc_key"),
-                                  F.lit(n_buckets)).cast("int"))
-    latest.persist()
-    try:
-        (latest.select("doc_key", "seq", "bucket")
-         .write.mode("append").parquet(f"{table_path}/dv"))
-        (latest.write.mode("append").parquet(f"{table_path}/delta"))
-    finally:
-        latest.unpersist()
+        _bucket(F.col("documentKey._id"), n_buckets).alias("bucket"))
+     .write.mode("append").parquet(f"{table_path}/delta"))
 
 
-_BASE_DIR_RE = re.compile(r"^base(?:-(\d+))?$")
+_BASE_DIR_RE = re.compile(r"^base-(\d+)$")
 
 
 def _base_versions(spark: SparkSession, table_path: str) -> list:
     """[(version, dirname)] of COMMITTED base snapshots, ascending.
-    Legacy unversioned base/ is version 0 (written before the
-    versioned-commit protocol; accepted as-is). base-N dirs count only
-    once their _SUCCESS marker exists — a compaction that crashed
-    mid-write leaves a marker-less dir readers must ignore."""
+    base-N dirs count only once their _SUCCESS marker exists — a
+    compaction that crashed mid-write leaves a marker-less dir readers
+    must ignore."""
     fs, root = hadoop_fs(spark, table_path)
     if not fs.exists(root):
         return []
@@ -371,82 +344,69 @@ def _base_versions(spark: SparkSession, table_path: str) -> list:
         if not m:
             continue
         _, marker = hadoop_fs(spark, f"{table_path}/{name}/_SUCCESS")
-        if m.group(1) is None:
-            out.append((0, name))
-        elif fs.exists(marker):
+        if fs.exists(marker):
             out.append((int(m.group(1)), name))
     return sorted(out)
 
 
 def read_merge_on_read(spark: SparkSession, table_path: str,
-                       policy: str = "last_writer_wins",
                        as_of: int | None = None) -> DataFrame:
-    """Current state of a MoR table: base rows not masked by the dv/
-    delete vectors, plus the policy-chosen winner per delta key.
-    Checkpoint-replayed duplicate commits collapse because identical
-    (doc_key, updated_at, seq) rows tie and row_number picks one.
-
-    Base-row masking reads ONLY the dv/ files — narrow (doc_key, seq,
-    bucket) rows, a fraction of the delta's byte size — so neither the
-    current-state nor the as_of mask ever scans the delta's doc
-    payloads. The base dir is the highest committed version (see
-    _base_versions).
+    """Current state of a MoR table: base rows whose key is in no
+    delta row, plus the newest delta row per key (see
+    resolve_current_state). Checkpoint-replayed duplicate commits
+    collapse because identical (doc_key, updated_at, seq, op) rows are
+    deduplicated before the resolve. The base dir is the highest
+    committed version (see _base_versions); with none, the base is
+    empty.
 
     as_of: VERSION AS OF read — reconstruct the state after commit
-    seq `as_of` by filtering BOTH append-only logs (delete vectors
-    make every historical snapshot free until the next compaction
-    folds them away)."""
+    seq `as_of` by filtering the append-only delta log (every
+    historical snapshot is free until the next compaction folds the
+    log away)."""
     versions = _base_versions(spark, table_path)
-    base_dir = (f"{table_path}/{versions[-1][1]}" if versions
-                else f"{table_path}/base")
-    base = _read_or_empty(spark, base_dir, _SNAPSHOT_SCHEMA)
+    base = (spark.read.schema(_SNAPSHOT_SCHEMA)
+            .parquet(f"{table_path}/{versions[-1][1]}") if versions
+            else spark.createDataFrame([], _SNAPSHOT_SCHEMA))
     delta = _read_or_empty(spark, f"{table_path}/delta",
                            "doc_key string, op string, doc string, "
                            "updated_at timestamp, seq long, bucket int")
-    dv = _read_or_empty(spark, f"{table_path}/dv",
-                        "doc_key string, seq long, bucket int")
     if as_of is not None:
         delta = delta.where(F.col("seq") <= as_of)
-        dv = dv.where(F.col("seq") <= as_of)
     return resolve_current_state(
-        base,
-        delta.dropDuplicates(["doc_key", "updated_at", "seq", "op"]),
-        policy, mask_keys=dv)
+        base, delta.dropDuplicates(["doc_key", "updated_at", "seq", "op"]))
 
 
-def compact_merge_on_read(spark: SparkSession, table_path: str,
-                          policy: str = "last_writer_wins") -> dict:
-    """Fold delta + dv into a FRESH versioned base (the MoR
+def compact_merge_on_read(spark: SparkSession, table_path: str) -> dict:
+    """Fold the delta log into a FRESH versioned base (the MoR
     maintenance job), crash-safe at every step:
 
-    1. resolve current state (reads base-N + delta + dv);
+    1. resolve current state (reads base-N + delta);
     2. write it to base-(N+1)/ — a directory that did not exist, so
-       the inputs are never overwritten in place and no
-       localCheckpoint guard is needed; the _SUCCESS marker Spark
-       commits at the end IS the commit point (readers ignore
+       no input is touched before the commit; the _SUCCESS marker
+       Spark commits at the end IS the commit point (readers ignore
        marker-less dirs);
-    3. cleanup: delete delta/, dv/ and every older base dir.
+    3. cleanup: delete delta/ and every older base dir.
 
-    A crash during (2) leaves the old base + logs fully intact; a
-    crash during (3) leaves the logs replaying onto the new base,
+    A crash during (2) leaves the old base + log fully intact; a
+    crash during (3) leaves the log replaying onto the new base,
     which is idempotent (same winners re-mask and re-insert identical
     rows), and the stale dirs are removed by the next compaction.
     Returns {'rows': n, 'base_dir': name} for the caller's
-    bookkeeping."""
+    bookkeeping; n is observed on the write itself."""
     old_versions = _base_versions(spark, table_path)
-    state = read_merge_on_read(spark, table_path, policy)
-    state = state.localCheckpoint(eager=True)  # one materialization
-    n = state.count()
     next_name = (f"base-{old_versions[-1][0] + 1}" if old_versions
                  else "base-1")
-    (state.repartition("bucket").write.mode("overwrite")
+    obs = Observation()
+    (read_merge_on_read(spark, table_path).repartition("bucket")
+     .observe(obs, F.count(F.lit(1)).alias("rows"))
+     .write.mode("overwrite")
      .partitionBy("bucket").parquet(f"{table_path}/{next_name}"))
     # ---- committed; everything below is cleanup ----
-    for sub in ("delta", "dv", *(name for _, name in old_versions)):
+    for sub in ("delta", *(name for _, name in old_versions)):
         fs, p = hadoop_fs(spark, f"{table_path}/{sub}")
         if fs.exists(p):
             fs.delete(p, True)
-    return {"rows": n, "base_dir": next_name}
+    return {"rows": obs.get["rows"], "base_dir": next_name}
 
 
 def _read_or_empty(spark: SparkSession, path: str,

@@ -1,4 +1,4 @@
-"""Fixture table loading (TESTDATA.md tables) and batch scan/sink surfaces.
+"""Fixture table loading (TESTDATA.md tables) and the Hadoop filesystem handle.
 
 Parquet schema memo: `read_parquet` infers a path's schema once (one
 footer-reading Spark job) and reads the same unchanged path again with
@@ -116,33 +116,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     elif isinstance(ts_type, TimestampNTZType):
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def read_batch(spark: SparkSession, path: str, fmt: str = "parquet",
-               schema=None, **options) -> DataFrame:
-    """Batch scan surface (SURVEY.md §2.2 'Scans / sources'): parquet
-    (self-describing, vectorized, filter/column pushdown), json and csv
-    (schema required for a stable plan — inference reads the data twice
-    and is forbidden on the 100 TB path)."""
-    reader = spark.read.format(fmt).options(**options)
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif fmt in ("json", "csv"):
-        raise ValueError(
-            f"{fmt} scans require an explicit schema: schema inference "
-            "re-reads the input and produces drifting plans at scale")
-    return reader.load(path)
-
-
-def write_batch(df: DataFrame, path: str, fmt: str = "parquet",
-                mode: str = "overwrite", partition_by: tuple[str, ...] = (),
-                **options) -> None:
-    """Batch sink surface: parquet/orc/json/csv, optionally hive-partitioned
-    (partition_by keys become directory pruning at read time)."""
-    writer = df.write.format(fmt).mode(mode).options(**options)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
 
 
 def hadoop_fs(spark: SparkSession, path: str):

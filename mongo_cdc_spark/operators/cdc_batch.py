@@ -635,15 +635,15 @@ def cdc_merge_on_read_state(spark: SparkSession,
     log synthesized over the orders base (two overlapping update
     generations at +30/+45 days on the mod-5/mod-10 keys, then
     deletes at +60 days on the mod-7 keys) resolved through the REAL
-    cdc.apply.resolve_current_state — delete-vector masking of base
-    rows plus last-writer-wins winner selection on (updated_at, seq).
+    cdc.apply.resolve_current_state — base rows masked by the delta's
+    keys plus the newest delta row per key on (updated_at, seq).
     Output: the per-bucket live-row manifest the MoR reader would
     serve. The file-backed surface (merge_on_read_apply /
     read_merge_on_read / compact_merge_on_read) runs the same
     resolver; its append/compact lifecycle is pinned hermetically in
     tests/test_cdc_apply.py.
 
-    Scale: delete vectors make each commit O(batch) appends instead
+    Scale: the delta log makes each commit an O(batch) append instead
     of O(bucket) rewrites; the resolve is one doc_key-partitioned
     rank window over the delta plus a broadcast anti-join against
     the (batch-sized) delta key set — the read path's cost until the
@@ -651,8 +651,7 @@ def cdc_merge_on_read_state(spark: SparkSession,
     from mongo_cdc_spark.cdc.apply import resolve_current_state
 
     base, delta = _mor_frames(spark, sf_dir)
-    merged = resolve_current_state(base, delta,
-                                   policy="last_writer_wins")
+    merged = resolve_current_state(base, delta)
     return (merged
             .groupBy(F.col("bucket").cast("int").alias("bucket"))
             .agg(F.count(F.lit(1)).alias("n_live"),
@@ -716,8 +715,8 @@ def cdc_mor_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     each commit seq 0-3 (0 = base only, 1 = first update generation,
     2 = both, 3 = after the deletes), resolved by the SAME
     cdc.apply.resolve_current_state used by the MoR reader — the
-    append-only delta log + delete vector make every historical
-    snapshot reconstructible for free by filtering seq <= s, the
+    append-only delta log makes every historical snapshot
+    reconstructible for free by filtering seq <= s, the
     Iceberg/Delta VERSION AS OF semantics. Output: the live-row count
     and total over the commit history (n_live dips at seq 3 as the
     deletes land).
@@ -732,9 +731,7 @@ def cdc_mor_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, delta = _mor_frames(spark, sf_dir)
     out = []
     for s in range(4):
-        st = resolve_current_state(
-            base, delta.where(F.col("seq") <= s),
-            policy="last_writer_wins")
+        st = resolve_current_state(base, delta.where(F.col("seq") <= s))
         out.append(st.select(F.lit(s).alias("as_of"),
                              F.col("doc").cast("bigint").alias("cents")))
     merged = out[0]

@@ -51,10 +51,11 @@ _BASE_CONF = {
 # tests/test_streaming.py proves state restores across query restarts
 # under this provider (changelog checkpointing on). Off by default so
 # the fast HDFS-backed path serves the small-state test suite.
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 ROCKSDB_STATE_CONF = {
-    "spark.sql.streaming.stateStore.providerClass":
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled":
         "true",
 }

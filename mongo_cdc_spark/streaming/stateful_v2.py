@@ -29,9 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
+from mongo_cdc_spark.session import ROCKSDB_PROVIDER  # noqa: F401
 
 _OUT_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType()),

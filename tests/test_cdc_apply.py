@@ -7,6 +7,7 @@ touched buckets are rewritten."""
 from __future__ import annotations
 
 import json
+import re
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -236,7 +237,9 @@ def test_apply_runs_one_write_job_without_checkpoint(
         spark, tmp_path: Path):
     """A non-first apply is one narrow pass plus one shuffle: at most 3
     Spark jobs, none of them a localCheckpoint, and a write plan with
-    exactly one shuffle exchange and no broadcast."""
+    exactly one shuffle exchange, no broadcast, and a snapshot scan
+    pruned to the touched bucket directories (a partition filter, not
+    a data filter)."""
     snap = str(tmp_path / "snap")
     _preload(spark, snap, 32, 4)
     events = _events_df(spark, [
@@ -268,12 +271,16 @@ def test_apply_runs_one_write_job_without_checkpoint(
         if e.executionId() <= last_before:
             continue
         nodes = sql_store.planGraph(e.executionId()).allNodes()
-        plans.append([nodes.apply(j).name() for j in range(nodes.size())])
-    writes = [p for p in plans
+        plans.append(([nodes.apply(j).name() for j in range(nodes.size())],
+                      e.physicalPlanDescription()))
+    writes = [(p, d) for p, d in plans
               if "Execute InsertIntoHadoopFsRelationCommand" in p]
     assert len(writes) == 1, plans
-    assert writes[0].count("Exchange") == 1, writes[0]
-    assert "BroadcastExchange" not in writes[0], writes[0]
+    nodes, described = writes[0]
+    assert nodes.count("Exchange") == 1, nodes
+    assert "BroadcastExchange" not in nodes, nodes
+    assert re.search(r"PartitionFilters: \[[^\]]*bucket#\d+ IN \(",
+                     described), described
 
 
 def test_apply_batch_wins_by_clustertime_then_resume_token(
@@ -469,15 +476,15 @@ def test_snapshot_diff_feed_converges_apply_store(spark, tmp_path: Path):
 # ----------------------------------------------- merge-on-read surface
 
 
-def _mor_state(spark, path, policy="last_writer_wins"):
+def _mor_state(spark, path):
     from mongo_cdc_spark.cdc.apply import read_merge_on_read
     return {r.doc_key: r.doc
-            for r in read_merge_on_read(spark, str(path), policy)
+            for r in read_merge_on_read(spark, str(path))
             .collect()}
 
 
 def test_mor_apply_read_lifecycle(spark, tmp_path: Path):
-    """Appends only, no base rewrite; read resolves base+delta+dv."""
+    """Appends only, no base rewrite; read resolves base+delta."""
     from mongo_cdc_spark.cdc.apply import (compact_merge_on_read,
                                            merge_on_read_apply)
 
@@ -499,13 +506,13 @@ def test_mor_apply_read_lifecycle(spark, tmp_path: Path):
     assert not (t / "base").exists()
     assert _mor_state(spark, t) == {"a": '{"v":10}', "c": '{"v":3}'}
 
-    # compaction folds delta+dv into a fresh VERSIONED base (base-1;
-    # the _SUCCESS marker is the commit point) and clears the logs
+    # compaction folds the delta into a fresh VERSIONED base (base-1;
+    # the _SUCCESS marker is the commit point) and clears the log
     stats = compact_merge_on_read(spark, str(t))
     assert stats["rows"] == 2
     assert stats["base_dir"] == "base-1"
     assert (t / "base-1" / "_SUCCESS").exists()
-    assert not (t / "delta").exists() and not (t / "dv").exists()
+    assert not (t / "delta").exists()
     assert _mor_state(spark, t) == {"a": '{"v":10}', "c": '{"v":3}'}
 
     # post-compaction commits keep working against the new base
@@ -517,7 +524,7 @@ def test_mor_apply_read_lifecycle(spark, tmp_path: Path):
 
 
 def test_mor_conflict_policies(spark, tmp_path: Path):
-    """last_writer_wins vs first_writer_wins over the same log."""
+    """The newest writer of a key wins across commits."""
     from mongo_cdc_spark.cdc.apply import merge_on_read_apply
 
     t = tmp_path / "mor_pol"
@@ -528,15 +535,69 @@ def test_mor_conflict_policies(spark, tmp_path: Path):
         _ev("k", op="update", doc='{"v":"new"}',
             ts="2024-11-08T00:00:05Z", rt="r2"),
     ]), batch_seq=1)
-    assert _mor_state(spark, t, "last_writer_wins") == {
-        "k": '{"v":"new"}'}
-    # reject-out-of-order semantics: the FIRST writer holds the key
-    assert _mor_state(spark, t, "first_writer_wins") == {
-        "k": '{"v":"old"}'}
-    import pytest as _pytest
-    from mongo_cdc_spark.cdc.apply import read_merge_on_read
-    with _pytest.raises(ValueError, match="unknown merge policy"):
-        read_merge_on_read(spark, str(t), "coin_flip").collect()
+    assert _mor_state(spark, t) == {"k": '{"v":"new"}'}
+
+
+def test_mor_commit_appends_one_log(spark, tmp_path: Path, spark_jobs):
+    """A commit is one append of delta/: at most 2 Spark jobs (the
+    winner window's shuffle map and the write), and no other log."""
+    from mongo_cdc_spark.cdc.apply import merge_on_read_apply
+
+    t = tmp_path / "mor_log"
+    merge_on_read_apply(spark, str(t), _events_df(spark, [
+        _ev("a", doc='{"v":1}', rt="r1"),
+        _ev("b", doc='{"v":2}', rt="r2"),
+    ]), batch_seq=0)
+    ev = _events_df(spark, [
+        _ev("a", op="update", doc='{"v":3}',
+            ts="2024-11-08T00:00:09Z", rt="r3"),
+        _ev("a", op="update", doc='{"v":4}',
+            ts="2024-11-08T00:00:09Z", rt="r4"),
+        _ev("c", doc='{"v":5}', ts="2024-11-08T00:00:09Z", rt="r5"),
+    ])
+    _, jobs = spark_jobs(
+        lambda: merge_on_read_apply(spark, str(t), ev, batch_seq=1))
+    assert 0 < jobs <= 2
+    assert sorted(p.name for p in t.iterdir()) == ["delta"]
+    assert _mor_state(spark, t) == {"a": '{"v":4}', "b": '{"v":2}',
+                                    "c": '{"v":5}'}
+
+
+def test_mor_mask_scans_no_doc_payload(spark, tmp_path: Path):
+    """The base-row mask of a MoR read (current and as_of) scans the
+    delta log without its doc column: column pruning keeps the
+    payloads out of the broadcast side."""
+    from mongo_cdc_spark.cdc.apply import (compact_merge_on_read,
+                                           merge_on_read_apply,
+                                           read_merge_on_read)
+
+    t = tmp_path / "mor_mask"
+    merge_on_read_apply(spark, str(t), _events_df(spark, [
+        _ev("a", doc='{"v":1}', rt="r1"),
+        _ev("b", doc='{"v":2}', rt="r2"),
+    ]), batch_seq=0)
+    compact_merge_on_read(spark, str(t))
+    merge_on_read_apply(spark, str(t), _events_df(spark, [
+        _ev("a", op="update", doc='{"v":3}',
+            ts="2024-11-08T00:00:09Z", rt="r3"),
+    ]), batch_seq=1)
+    for as_of in (None, 0):
+        plan = (read_merge_on_read(spark, str(t), as_of=as_of)
+                ._jdf.queryExecution().executedPlan().toString())
+        lines = plan.splitlines()
+        at = next(i for i, ln in enumerate(lines)
+                  if "BroadcastExchange" in ln)
+        depth = lines[at].index("BroadcastExchange")
+        subtree = [lines[at]]
+        for ln in lines[at + 1:]:
+            if len(ln) - len(ln.lstrip(" :+-")) <= depth:
+                break
+            subtree.append(ln)
+        schemas = [re.search(r"ReadSchema: struct<([^>]*)>", ln).group(1)
+                   for ln in subtree if "FileScan parquet" in ln]
+        assert len(schemas) == 1, subtree
+        fields = [f.split(":")[0] for f in schemas[0].split(",")]
+        assert "doc_key" in fields and "doc" not in fields, schemas
 
 
 def test_mor_replayed_batch_is_idempotent(spark, tmp_path: Path):
@@ -639,36 +700,76 @@ def test_mor_crashed_compaction_dir_is_ignored(spark, tmp_path: Path):
     assert _mor_state(spark, t) == {"a": '{"v":1}', "b": '{"v":2}'}
 
 
-def test_mor_torn_commit_heals_on_replay(spark, tmp_path: Path):
-    """dv written, delta not (crash between the two appends): interim
-    reads UNDER-report the touched keys — never duplicate them — and
-    the checkpointed replay of the same batch_seq restores them."""
-    from mongo_cdc_spark.cdc.apply import merge_on_read_apply
+def test_mor_partial_append_applies_whole_keys(spark, tmp_path: Path):
+    """An append that lands only in part (some of a batch's winner
+    rows in delta/, the rest lost in a crash) leaves every key at its
+    new or its pre-batch value — none vanishes, none repeats — and the
+    checkpointed replay of the same batch_seq converges."""
+    from mongo_cdc_spark.cdc.apply import (compact_merge_on_read,
+                                           merge_on_read_apply,
+                                           read_merge_on_read)
 
-    t = tmp_path / "mor_torn"
+    t = tmp_path / "mor_partial"
     merge_on_read_apply(spark, str(t), _events_df(spark, [
-        _ev("a", doc='{"v":1}', rt="r1"),
-        _ev("b", doc='{"v":2}', rt="r2"),
+        _ev(k, doc=f'{{"v":"{k}0"}}', rt=f"r{k}")
+        for k in ("a", "b", "c", "d")
     ]), batch_seq=0)
-    from mongo_cdc_spark.cdc.apply import compact_merge_on_read
     compact_merge_on_read(spark, str(t))
+    merge_on_read_apply(spark, str(t), _events_df(spark, [
+        _ev("d", op="update", doc='{"v":"d1"}',
+            ts="2024-11-08T00:00:05Z", rt="s0"),
+    ]), batch_seq=1)
+    pre = _mor_state(spark, t)
+    assert pre == {"a": '{"v":"a0"}', "b": '{"v":"b0"}',
+                   "c": '{"v":"c0"}', "d": '{"v":"d1"}'}
 
-    # torn batch 1: ONLY the dv append lands (update a)
-    ev = _events_df(spark, [_ev("a", op="update", doc='{"v":9}',
-                                ts="2024-11-08T00:00:09Z", rt="r3")])
-    from mongo_cdc_spark.cdc.apply import latest_change_per_key
-    from pyspark.sql import functions as SF
-    torn = latest_change_per_key(ev).select(
-        SF.col("documentKey._id").alias("doc_key"),
-        SF.lit(1).cast("long").alias("seq"),
-        SF.pmod(SF.xxhash64(SF.col("documentKey._id")),
-                SF.lit(16)).cast("int").alias("bucket"))
-    torn.write.mode("append").parquet(str(t / "dv"))
+    t2 = "2024-11-08T00:00:09Z"
+    batch = [
+        _ev("a", op="update", doc='{"v":"a1"}', ts=t2, rt="s1"),
+        _ev("a", op="update", doc='{"v":"a2"}', ts=t2, rt="s2"),
+        _ev("b", op="update", doc='{"v":"b2"}', ts=t2, rt="s3"),
+        _ev("c", op="delete", ts=t2, rt="s4"),
+        _ev("d", op="delete", ts=t2, rt="s5"),
+        _ev("e", doc='{"v":"e2"}', ts=t2, rt="s6"),
+    ]
+    post = {"a": '{"v":"a2"}', "b": '{"v":"b2"}', "e": '{"v":"e2"}'}
+    # the winner row of a key depends on that key's events only, so
+    # committing a subset of the keys appends exactly the subset of
+    # the full batch's delta rows a torn append would leave
+    landed = {"a", "c", "e"}
+    merge_on_read_apply(spark, str(t), _events_df(spark, [
+        e for e in batch if e["documentKey"]["_id"] in landed
+    ]), batch_seq=2)
 
-    # interim: 'a' masked pending replay (under-report, no duplicate)
-    state = _mor_state(spark, t)
-    assert state == {"b": '{"v":2}'}
+    keys = [r.doc_key for r in
+            read_merge_on_read(spark, str(t)).select("doc_key").collect()]
+    assert len(keys) == len(set(keys))
+    torn = _mor_state(spark, t)
+    for k in pre.keys() | post.keys():
+        want = post if k in landed else pre
+        assert torn.get(k) == want.get(k), k
 
-    # replay of the SAME batch completes both appends; dedup collapses
-    merge_on_read_apply(spark, str(t), ev, batch_seq=1)
-    assert _mor_state(spark, t) == {"a": '{"v":9}', "b": '{"v":2}'}
+    merge_on_read_apply(spark, str(t), _events_df(spark, batch),
+                        batch_seq=2)
+    assert _mor_state(spark, t) == post
+
+
+def test_mor_compaction_rows_match_new_base(spark, tmp_path: Path):
+    """compact_merge_on_read's row count is the row count of the base
+    it commits."""
+    from mongo_cdc_spark.cdc.apply import (compact_merge_on_read,
+                                           merge_on_read_apply)
+
+    t = tmp_path / "mor_rows"
+    keys = [f"k{i}" for i in range(40)]
+    merge_on_read_apply(spark, str(t), _events_df(spark, [
+        _ev(k, doc='{"v":0}', rt=f"r{i}") for i, k in enumerate(keys)
+    ]), batch_seq=0)
+    merge_on_read_apply(spark, str(t), _events_df(spark, [
+        _ev(k, op="delete", ts="2024-11-08T00:00:09Z", rt=f"d{i}")
+        for i, k in enumerate(keys) if i % 7 == 0
+    ] + [_ev("new", doc='{"v":1}', ts="2024-11-08T00:00:09Z", rt="n")]),
+        batch_seq=1)
+    stats = compact_merge_on_read(spark, str(t))
+    written = spark.read.parquet(str(t / stats["base_dir"])).count()
+    assert stats["rows"] == written == 40 - 6 + 1

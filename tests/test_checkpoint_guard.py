@@ -98,15 +98,15 @@ _CHECKPOINT_ALLOWLIST: frozenset[tuple[str, str]] = frozenset({
     # apply_batch_to_snapshot needs no entry: its one shuffle merges
     # the cached batch with the touched buckets' rows, and its dynamic
     # overwrite stages output and swaps bucket dirs in only at job
-    # commit, so it may read the files it replaces. These three still
+    # commit, so it may read the files it replaces.
+    # compact_merge_on_read needs none either: it writes a fresh
+    # base-(N+1) dir, touches no input before that commit, and counts
+    # its rows with an Observation on the write. These two still
     # checkpoint:
     # compact_snapshot's checkpoint is the read point its lost-update
-    # listing compare is taken against; compact_merge_on_read's is the
-    # one read of base + logs that its row count and new base share
-    # before the logs are deleted; apply_deltas_to_view does a
+    # listing compare is taken against; apply_deltas_to_view does a
     # STATIC overwrite, which deletes the view before writing it.
     ("mongo_cdc_spark/cdc/apply.py", "compact_snapshot"),
-    ("mongo_cdc_spark/cdc/apply.py", "compact_merge_on_read"),
     ("mongo_cdc_spark/cdc/incremental.py", "apply_deltas_to_view"),
 })
 

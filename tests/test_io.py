@@ -1,5 +1,5 @@
-"""Scan/sink surface tests: parquet/json/csv round trips, partitioned
-writes, and the explicit-schema rule for text formats."""
+"""Fixture loading tests: the engine-facing schema of every table at
+every scale factor, and the parquet schema memo of `read_parquet`."""
 
 from __future__ import annotations
 
@@ -8,31 +8,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 
-from mongo_cdc_spark.io import load_table, read_batch, read_parquet, write_batch
-
-
-def test_json_csv_require_schema(spark, tmp_path):
-    with pytest.raises(ValueError, match="explicit schema"):
-        read_batch(spark, str(tmp_path), fmt="json")
-    with pytest.raises(ValueError, match="explicit schema"):
-        read_batch(spark, str(tmp_path), fmt="csv")
-
-
-@pytest.mark.parametrize("fmt,opts", [
-    ("parquet", {}),
-    ("json", {}),
-    ("csv", {"header": "true"}),
-    ("orc", {}),
-])
-def test_round_trip(spark, sf_dir, tmp_path, fmt, opts):
-    src = load_table(spark, sf_dir, "nation")
-    out = str(tmp_path / fmt)
-    write_batch(src, out, fmt=fmt, **opts)
-    back = read_batch(spark, out, fmt=fmt, schema=src.schema, **opts)
-    assert back.count() == src.count()
-    assert {r.n_name for r in back.collect()} == \
-        {r.n_name for r in src.collect()}
-
+from mongo_cdc_spark.io import load_table, read_parquet
 
 _EXPECTED_COLS = {
     "region": ["r_regionkey", "r_name"],
@@ -88,10 +64,13 @@ def test_fixture_drift_canary(spark, sf, sf_dir):
 
 
 def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
+    """A hive-partitioned directory read back through `read_parquet`
+    (the memoized schema carries the partition column) still turns a
+    filter on the partition column into directory pruning."""
     src = load_table(spark, sf_dir, "nation")
     out = str(tmp_path / "part")
-    write_batch(src, out, partition_by=("n_regionkey",))
-    back = read_batch(spark, out)
+    src.write.mode("overwrite").partitionBy("n_regionkey").parquet(out)
+    back = read_parquet(spark, out)
     pruned = back.filter("n_regionkey = 0")
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     # partition filter must become directory pruning, not a data filter
